@@ -1,0 +1,5 @@
+"""Closed-loop benchmark of the hypergraph engine's public calls.
+
+``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` runs one workload; see ``perfbench/README.md``.
+"""
