@@ -206,12 +206,18 @@ class Hypergraph:
         if pre is not None:
             # materialize both layouts off the transient cache, then
             # release it (one incidence computation total); num_edges
-            # reads exchange-free off the edge-partitioned layout
+            # reads exchange-free off the edge-partitioned layout; a
+            # NULL edge_id (a non-numeric id cast to long with ANSI
+            # mode off) is not an edge, as in sources/bucketed.py and
+            # sources/coo.py
             by_vertex.count()
             by_edge.count()
             pre.unpersist()
             if need_ne:
-                num_edges = by_edge.select("edge_id").distinct().count()
+                num_edges = (
+                    by_edge.where(F.col("edge_id").isNotNull())
+                    .select("edge_id").distinct().count()
+                )
         salted_by_vertex = salted_by_edge = None
         if salt > 1:
             salted_by_vertex = (

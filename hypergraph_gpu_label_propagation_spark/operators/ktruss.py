@@ -132,6 +132,7 @@ def k_truss(
         # threshold the r06 shuffle shape runs unchanged
         from hypergraph_gpu_label_propagation_spark.operators.triangles import (
             _triangles_broadcast_rows,
+            packed_pair_key,
         )
 
         _use_bcast0 = n_alive <= _triangles_broadcast_rows(hg.spark)
@@ -145,15 +146,9 @@ def k_truss(
             # triangles._oriented_triangles) — base pairs are unique so
             # the inner join's multiplicity is unchanged
             tri0 = (
-                wedges0.withColumn(
-                    "_uw", F.shiftleft(F.col("u"), 32) + F.col("w")
-                )
+                wedges0.withColumn("_uw", packed_pair_key("u", "w"))
                 .join(
-                    F.broadcast(
-                        base.select(
-                            (F.shiftleft(F.col("u"), 32) + F.col("v")).alias("_uw")
-                        )
-                    ),
+                    F.broadcast(base.select(packed_pair_key("u", "v").alias("_uw"))),
                     "_uw",
                 )
                 .drop("_uw")

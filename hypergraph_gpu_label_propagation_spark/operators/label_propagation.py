@@ -30,8 +30,6 @@ Scale design:
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -42,6 +40,10 @@ from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.majority import (
     majority_label,
     majority_label_grouped_sql,
+)
+from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
+    find_latest_snapshot,
+    write_snapshot,
 )
 from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
 
@@ -212,27 +214,6 @@ class LPResult:
     metrics: list[SuperstepMetrics] = field(default_factory=list)
 
 
-def _labels_path(checkpoint_dir: str, superstep: int) -> str:
-    return os.path.join(checkpoint_dir, f"labels_superstep={superstep:05d}")
-
-
-def find_resume_point(spark, checkpoint_dir: str) -> tuple[DataFrame, int] | None:
-    """Latest durable label snapshot under ``checkpoint_dir``, or None."""
-    if not os.path.isdir(checkpoint_dir):
-        return None
-    snaps = sorted(
-        d for d in os.listdir(checkpoint_dir)
-        if d.startswith("labels_superstep=") and os.path.exists(
-            os.path.join(checkpoint_dir, d, "_SUCCESS")
-        )
-    )
-    if not snaps:
-        return None
-    superstep = int(snaps[-1].split("=")[1])
-    df = spark.read.parquet(os.path.join(checkpoint_dir, snaps[-1]))
-    return df.select("vertex_id", "label"), superstep
-
-
 def label_propagation(
     hg: Hypergraph,
     init_labels: DataFrame | None = None,
@@ -270,7 +251,7 @@ def label_propagation(
     )
     start_step = 0
     if resume and checkpoint_dir:
-        found = find_resume_point(hg.spark, checkpoint_dir)
+        found = find_latest_snapshot(hg.spark, checkpoint_dir, "labels")
         if found is not None:
             labels, start_step = found
             if verbose:
@@ -328,19 +309,12 @@ def label_propagation(
             if verbose and iterations % 10 == 0:
                 print(f"[lp] superstep {iterations}: changes={changes}")
             if checkpoint_dir and (iterations % checkpoint_every == 0):
-                from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
-                    write_partition_manifest,
-                )
-
-                snap = _labels_path(checkpoint_dir, iterations)
-                labels.write.mode("overwrite").parquet(snap)
                 # frontier size (= changes) + per-partition lineage ride
                 # the snapshot (north rule resumability metadata)
-                write_partition_manifest(
-                    snap, iterations, {"op": "lp", "frontier": int(changes)}
+                write_snapshot(
+                    labels, checkpoint_dir, "labels", iterations, m.__dict__,
+                    manifest_extra={"frontier": int(changes)},
                 )
-                with open(os.path.join(checkpoint_dir, "metrics.jsonl"), "a") as f:
-                    f.write(json.dumps(m.__dict__) + "\n")
             if changes / nv < tolerance:  # strict <, post-update (openmp:148-154)
                 converged = True
                 break

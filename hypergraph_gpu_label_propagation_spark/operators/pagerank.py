@@ -61,11 +61,14 @@ def _walk_gather(hg: Hypergraph, state: DataFrame) -> DataFrame:
     # broadcast against the layout partitioned by the aggregation key,
     # so both gathers run with ZERO E-sized exchanges per iteration;
     # big frames (or salted layouts) fall back to the co-partitioned
-    # shuffle path — exact either way, sum/count are algebraic.  The
-    # FP sum order within each edge/vertex group is the same
-    # partial/final aggregation either way (one partition holds the
-    # whole group pre-aggregation under broadcast), and every board
-    # row rounds to 6 decimals with tol bounds far below that.
+    # shuffle path — equal in exact arithmetic, sum/count are
+    # algebraic.  In floating point they are not bit-identical: the
+    # broadcast path sums a whole group inside one partition while the
+    # shuffle path merges per-partition partials, and the partial
+    # boundaries also move with the partition count.  Ranks therefore
+    # agree to within the last few ULPs, and the iteration at which
+    # `tol` is met can flip when a delta lands right at it; every board
+    # row rounds to 6 decimals, far above that difference.
     edge_mass = (
         hg.gather_to_edge(contrib)
         .groupBy("edge_id")

@@ -64,6 +64,14 @@ def _triangles_broadcast_rows(spark) -> int:
         return TRIANGLES_BROADCAST_MAX_ROWS
 
 
+def packed_pair_key(hi: str, lo: str):
+    """``(hi << 32) + lo`` as one long: injective for ids in [0, 2^31).
+    Both columns are cast to long first — ``shiftleft`` keeps its
+    input's type and masks an int shift count to 5 bits, so on int
+    columns a shift by 32 is a no-op and the key collapses to hi + lo."""
+    return F.shiftleft(F.col(hi).cast("long"), 32) + F.col(lo).cast("long")
+
+
 def _oriented_triangles(
     adj: DataFrame, n_pairs: int, max_id: int | None = None
 ) -> DataFrame:
@@ -82,14 +90,9 @@ def _oriented_triangles(
     if n_pairs <= _triangles_broadcast_rows(spark):
         wedges = adj.join(F.broadcast(right), "v")
         if max_id is not None and 0 < max_id < 2**31:
-            # (u << 32) | w is injective for dense non-negative ids
-            closing_packed = adj.select(
-                (F.shiftleft(F.col("u"), 32) + F.col("v")).alias("_uw")
-            )
+            closing_packed = adj.select(packed_pair_key("u", "v").alias("_uw"))
             return (
-                wedges.withColumn(
-                    "_uw", F.shiftleft(F.col("u"), 32) + F.col("w")
-                )
+                wedges.withColumn("_uw", packed_pair_key("u", "w"))
                 .join(F.broadcast(closing_packed), "_uw", "left_semi")
                 .drop("_uw")
             )

@@ -49,11 +49,14 @@ def write_partition_manifest(path: str, superstep: int, extra: dict | None = Non
 
 def write_snapshot(
     df: DataFrame, checkpoint_dir: str, prefix: str, superstep: int,
-    metrics: dict | None = None,
+    metrics: dict | None = None, manifest_extra: dict | None = None,
 ) -> None:
+    """Write ``df`` as the ``prefix`` snapshot of ``superstep``, its
+    partition manifest (plus ``manifest_extra``), and append ``metrics``
+    to ``metrics.jsonl``."""
     path = snapshot_path(checkpoint_dir, prefix, superstep)
     df.write.mode("overwrite").parquet(path)
-    write_partition_manifest(path, superstep, {"op": prefix})
+    write_partition_manifest(path, superstep, {"op": prefix, **(manifest_extra or {})})
     if metrics is not None:
         with open(os.path.join(checkpoint_dir, "metrics.jsonl"), "a") as f:
             f.write(json.dumps(metrics) + "\n")

@@ -152,7 +152,8 @@ def _write_iceberg_bucketed(
 
 
 def write_bucketed(
-    incidence: DataFrame, name: str, buckets: int = 32, mode: str = "overwrite"
+    incidence: DataFrame, name: str, buckets: int | None = None,
+    mode: str = "overwrite",
 ) -> tuple[str, str]:
     """Persist the dual layout as two bucketed tables
     ``{name}_by_vertex`` / ``{name}_by_edge``; returns the table names.
@@ -161,10 +162,27 @@ def write_bucketed(
     configured (:func:`iceberg_available`), else Spark's built-in
     Hive-style bucketing — both give exchange-free joins on the bucket
     key; Iceberg additionally gives snapshot isolation for the
-    checkpoint/resume tables."""
+    checkpoint/resume tables.
+
+    ``buckets`` defaults to the loop partition rule
+    (``plans/tuning.py::loop_partitions``) over the incidence row
+    count, the rule ``Hypergraph.freeze`` sizes its layouts by: under
+    the broadcast gather every gather/checkpoint stage runs one task
+    per bucket, so buckets beyond the loop's partition count are paid
+    for in tasks every round (BENCH_SCALING.md)."""
     import shutil
 
+    from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
+
     spark = incidence.sparkSession
+    # one row count, before either table write: it sizes the buckets
+    # and rides the manifest, so freeze_from_bucketed's
+    # count_incidence() runs no job
+    incidence_rows = incidence.count()
+    if buckets is None:
+        buckets = loop_partitions(
+            incidence_rows, spark.sparkContext.defaultParallelism
+        )
     by_vertex, by_edge = f"{name}_by_vertex", f"{name}_by_edge"
     # both-or-neither protocol (r06 verdict #8): retract the layout's
     # commit record BEFORE touching either table — from here until the
@@ -181,7 +199,9 @@ def write_bucketed(
             spark,
             name,
             {"name": name, "buckets": buckets, "tables": [by_vertex, by_edge],
-             "catalog": "iceberg"},
+             "catalog": "iceberg",
+             # an append adds to rows this write never counted
+             "incidence_rows": incidence_rows if v2_verb(mode)[1] else None},
         )
         return by_vertex, by_edge
     warehouse = _warehouse_dir(spark)
@@ -212,14 +232,16 @@ def write_bucketed(
     # the written by_edge table — the per-run freeze_from_bucketed no
     # longer pays a count_distinct scan; build-once/run-many shape).
     # ONE job: the per-edge group runs bucket-local (the scan reports
-    # the bucketing), the outer agg is a single-row reduction.
+    # the bucketing), the outer agg is a single-row reduction.  A NULL
+    # edge_id group is not an edge (count(edge_id) skips it), as in
+    # Hypergraph.freeze and sources/coo.py.
     from pyspark.sql import functions as F
 
     row = (
         spark.table(by_edge)
         .groupBy("edge_id")
         .agg(F.max("vertex_id").alias("_mv"))
-        .agg((F.max("_mv") + 1).alias("nv"), F.count("*").alias("ne"))
+        .agg((F.max("_mv") + 1).alias("nv"), F.count("edge_id").alias("ne"))
         .collect()[0]
     )
     nv, ne = int(row["nv"] or 0), int(row["ne"] or 0)
@@ -228,7 +250,7 @@ def write_bucketed(
         name,
         {"name": name, "kind": "bucketed_dual", "buckets": buckets,
          "tables": [by_vertex, by_edge], "catalog": "builtin",
-         "num_vertices": nv, "num_edges": ne},
+         "num_vertices": nv, "num_edges": ne, "incidence_rows": incidence_rows},
     )
     return by_vertex, by_edge
 
@@ -306,7 +328,11 @@ def freeze_from_bucketed(
         vertex_labels=labels,
         num_vertices=num_vertices,
         num_edges=num_edges,
-        num_partitions=32,
+        # the layout's own bucket count, so the loops' partition rule
+        # and the scan agree; manifests without a row count (written
+        # before it was recorded) leave count_incidence() to one job
+        num_partitions=meta["buckets"],
+        incidence_rows=meta.get("incidence_rows"),
     )
     hg._persisted = [by_vertex, by_edge] if persist else []
     return hg
