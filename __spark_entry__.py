@@ -1966,11 +1966,6 @@ def _sql_simhash() -> str:
     )
 
 
-def _dh60(expr: str) -> str:
-    """DuckDB twin of operators.dedup.h60 (60-bit md5 prefix)."""
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
 def _sql_graph_sampling() -> str:
     """DuckDB twin of q_graph_sampling: unrolls the fanout hops and walk
     steps as CTE chains; every hash-ranked choice is replicated with the

@@ -19,7 +19,7 @@ Scale design:
 - both joins hit the pre-partitioned incidence layouts (the frozen
   dual-CSR analog) — only the (small, one-row-per-id) label frames
   shuffle each superstep;
-- the majority kernel is a single bounded count-vector aggregation per
+- the majority kernel is a narrow (key, label, count) aggregation per
   phase (see operators/majority.py) — map-side partial aggregation
   absorbs hyperedge/vertex skew exactly;
 - ``localCheckpoint`` per superstep truncates lineage so plan size stays
@@ -62,21 +62,6 @@ def edge_majority_step(
     """
     gathered = hg_incidence_by_vertex.join(vertex_labels, "vertex_id")
     return majority_label(gathered, "edge_id", "label", max_labels, out_col="label")
-
-
-def vertex_majority_step(
-    hg_incidence_by_edge: DataFrame,
-    edge_labels: DataFrame,
-    vertex_universe: DataFrame,
-    max_labels: int = DEFAULT_MAX_LABELS,
-) -> DataFrame:
-    """Phase 2: (vertex_id, label) for EVERY vertex in the universe;
-    degree-0 vertices get label 0 (argmax of all-zero counts)."""
-    gathered = hg_incidence_by_edge.join(edge_labels, "edge_id").select("vertex_id", "label")
-    maj = majority_label(gathered, "vertex_id", "label", max_labels, out_col="_maj")
-    return vertex_universe.join(maj, "vertex_id", "left").select(
-        "vertex_id", F.coalesce("_maj", F.lit(0)).cast("int").alias("label")
-    )
 
 
 def weighted_vertex_majority_step(
@@ -122,7 +107,7 @@ def lp_superstep(
     hg: Hypergraph,
     vertex_labels: DataFrame,
     max_labels: int = DEFAULT_MAX_LABELS,
-    strategy: str = "narrow",
+    *,
     labels_in_range: bool = False,
     weighted: bool = False,
 ) -> DataFrame:
@@ -133,48 +118,39 @@ def lp_superstep(
     degree-0 -> label 0 rule (coalesce) and the change flag — one
     shuffle fewer than joining a separate vertex universe.
 
-    ``strategy``: "narrow" (default: (key,label,count) rows, two narrow
-    shuffles per phase — ~3x less shuffle volume on low-degree graphs,
-    measured 2.2-2.3x faster and better-scaling on the 20M-row kernel
-    bench) or "vector" (bounded count-vector, one wide shuffle per
-    phase).  Both exact, incl. skew (partial agg emits <= max_labels
-    rows per hot key per map partition either way).
+    Both phases vote with narrow (key, label, count) rows — two narrow
+    shuffles per phase, ~3x less shuffle volume than the bounded
+    count-vector form on low-degree graphs (2.2-2.3x faster on the
+    20M-row kernel bench).  Exact incl. skew: partial aggregation emits
+    <= max_labels rows per hot key per map partition.
     """
     # join strategy note (measured on the 20M-row kernel bench): letting
     # Catalyst broadcast the one-row-per-id frames beats forcing
     # shuffle_hash/merge at every parallelism level tested — the
     # broadcast build cost is lower than the extra exchanges the hints
     # introduce; revisit on a real cluster where driver egress matters
-    if strategy not in ("vector", "narrow"):
-        raise ValueError(f"unknown majority strategy {strategy!r}; use 'vector' or 'narrow'")
-    labels_h = vertex_labels
-    if strategy == "vector":
-        edge_labels = edge_majority_step(hg.incidence_by_vertex, labels_h, max_labels)
+    #
+    # edges whose every member is unlabeled drop out of the argmax and
+    # are coalesced back to label 0 against the (co-partitioned,
+    # shuffle-free) edge universe — reference all-zero-counts rule.
+    # gather_to_* (r08, guide §2.4): when the one-row-per-id frame is
+    # small enough to broadcast, the gather joins it against the layout
+    # partitioned by the AGGREGATION key, so the majority groupBys below
+    # run exchange-free — zero E-sized exchanges per superstep; too-big
+    # frames (or salted layouts) fall back to the co-partitioned shuffle
+    # path (exact either way — the majority aggregation is algebraic)
+    gathered_e = hg.gather_to_edge(vertex_labels)
+    best_e = majority_label_grouped_sql(gathered_e, "edge_id", "label", max_labels, "_m")
+    if labels_in_range:
+        # every input label is in [0, max_labels) (true from the second
+        # superstep on — phase-2 output is always in range), so no edge
+        # can drop out of the argmax: skip the universe-coalesce join
+        edge_labels = best_e.select("edge_id", F.col("_m").alias("label"))
     else:
-        # narrow shuffles: (key,label,count) rows; edges whose every
-        # member is unlabeled drop out of the argmax and are coalesced
-        # back to label 0 against the (co-partitioned, shuffle-free)
-        # edge universe — reference all-zero-counts rule.  gather_to_*
-        # (r08, guide §2.4): when the one-row-per-id frame is small
-        # enough to broadcast, the gather joins it against the layout
-        # partitioned by the AGGREGATION key, so the majority groupBys
-        # below run exchange-free — zero E-sized exchanges per
-        # superstep; too-big frames (or salted layouts) fall back to
-        # the co-partitioned shuffle path (exact either way — the
-        # majority aggregation is algebraic)
-        gathered_e = hg.gather_to_edge(labels_h)
-        best_e = majority_label_grouped_sql(gathered_e, "edge_id", "label", max_labels, "_m")
-        if labels_in_range:
-            # every input label is in [0, max_labels) (true from the
-            # second superstep on — phase-2 output is always in range),
-            # so no edge can drop out of the argmax: skip the
-            # universe-coalesce join entirely
-            edge_labels = best_e.select("edge_id", F.col("_m").alias("label"))
-        else:
-            edge_universe = hg.incidence_by_edge.select("edge_id").distinct()
-            edge_labels = edge_universe.join(best_e, "edge_id", "left").select(
-                "edge_id", F.coalesce("_m", F.lit(0)).cast("int").alias("label")
-            )
+        edge_universe = hg.incidence_by_edge.select("edge_id").distinct()
+        edge_labels = edge_universe.join(best_e, "edge_id", "left").select(
+            "edge_id", F.coalesce("_m", F.lit(0)).cast("int").alias("label")
+        )
     if weighted:
         universe = vertex_labels.select("vertex_id")
         new = weighted_vertex_majority_step(hg, edge_labels, universe, max_labels)
@@ -186,10 +162,7 @@ def lp_superstep(
             (F.col("label") != F.col("_old")).cast("int").alias("changed"),
         )
     gathered = hg.gather_to_vertex(edge_labels).select("vertex_id", "label")
-    if strategy == "vector":
-        maj = majority_label(gathered, "vertex_id", "label", max_labels, out_col="_maj")
-    else:
-        maj = majority_label_grouped_sql(gathered, "vertex_id", "label", max_labels, "_maj")
+    maj = majority_label_grouped_sql(gathered, "vertex_id", "label", max_labels, "_maj")
     new_label = F.coalesce("_maj", F.lit(0)).cast("int")
     return vertex_labels.join(maj, "vertex_id", "left").select(
         "vertex_id",
@@ -224,7 +197,6 @@ def label_propagation(
     checkpoint_every: int = 1,
     resume: bool = False,
     verbose: bool = False,
-    strategy: str = "narrow",
     weighted: bool = False,
 ) -> LPResult:
     """Run LP to convergence (reference loop openmp:58-158, defaults
@@ -282,7 +254,7 @@ def label_propagation(
             obs = Observation(f"lp_changes_{step}")
             stepped = (
                 lp_superstep(
-                    hg, labels, max_labels, strategy,
+                    hg, labels, max_labels,
                     # phase-2 output is always in [0, max_labels): from the
                     # second superstep (or after a resume, whose snapshot is
                     # phase-2 output) the sentinel path is dead code

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tests.conftest import incidence_from_edges
 
@@ -569,44 +570,74 @@ def test_coreness_fused_steps_equivalent(spark):
     hg.unpersist()
 
 
+def _jacobi_changes(edges, nv):
+    """Change count of every Jacobi h-index sweep from the capped start
+    c0 = min(deg, H_g), ending with the zero-change sweep — the
+    sequence a one-sweep-per-round run must report."""
+    nbrs = [set() for _ in range(nv)]
+    for ms in edges:
+        for a in ms:
+            nbrs[a].update(b for b in ms if b != a)
+    live = [v for v in range(nv) if nbrs[v]]
+    degs = sorted((len(nbrs[v]) for v in live), reverse=True)
+    h_g = sum(1 for i, d in enumerate(degs) if d >= i + 1)
+    c = {v: min(len(nbrs[v]), h_g) for v in live}
+    out = []
+    while True:
+        nxt = {}
+        for v in live:
+            vals = sorted((c[u] for u in nbrs[v]), reverse=True)
+            nxt[v] = sum(1 for i, x in enumerate(vals) if x >= i + 1)
+        out.append(sum(nxt[v] != c[v] for v in live))
+        c = nxt
+        if out[-1] == 0:
+            return out
+
+
 def test_coreness_sweep_modes_identical(spark):
-    """The three sweep implementations are the SAME Jacobi iteration:
-    "hist" (histogram + window), "arr" (single-exchange sorted-array
-    h), and "auto" (arr full sweeps, then incremental histogram
-    maintenance once the change count collapses) must produce
-    identical values — and auto must be sweep-for-sweep identical to
-    arr (same rounds, same change counts), because an incremental
-    round applies exact integer histogram deltas and recomputes h
-    only where the histogram changed (h is a function of the
-    histogram alone).  Also pins the pruned path (frontier_threshold
-    > 0, r07 default-off) to the same fixed point."""
-    from hypergraph_gpu_label_propagation_spark.model import Hypergraph
+    """The one sweep shape at fused_steps 1 and 2 reaches the exact
+    coreness of the textbook peel; at fused_steps=1 every round is one
+    Jacobi sweep, so the change counts are the sweep-by-sweep ones."""
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     rows = sorted(
         {(e, (11 * e + 3 * v) % 90) for e in range(160) for v in range(5)}
         | {(200 + e, (e + v) % 12) for e in range(30) for v in range(4)}
     )
+    members: dict[int, list[int]] = {}
+    for e, v in rows:
+        members.setdefault(e, []).append(v)
+    edges = list(members.values())
+    nv = 90
     inc = spark.createDataFrame(rows, "edge_id long, vertex_id long")
-    hg = Hypergraph.freeze(spark, inc)
-    runs = {
-        "hist": coreness(hg, sweep="hist", fused_steps=2),
-        "arr": coreness(hg, sweep="arr", fused_steps=2),
-        # inc_threshold > 1 forces the incremental switch at round 2
-        # (the first round with a delta available), so every round
-        # after the first exercises the delta path regardless of how
-        # fast the fixture converges
-        "auto": coreness(hg, sweep="auto", fused_steps=2, inc_threshold=1.1),
-        "auto_f1": coreness(hg, sweep="auto", fused_steps=1, inc_threshold=1.1),
-        "pruned": coreness(hg, sweep="hist", frontier_threshold=0.05),
-    }
-    vals = {k: sorted(map(tuple, r.coreness.collect())) for k, r in runs.items()}
-    for k in vals:
-        assert vals[k] == vals["hist"], k
-    assert runs["auto"].changes_per_iter == runs["arr"].changes_per_iter
-    assert runs["auto_f1"].changes_per_iter == coreness(
-        hg, sweep="arr", fused_steps=1
-    ).changes_per_iter
-    # at least one incremental round ran (round 2 onward is incremental)
-    assert runs["auto"].iterations >= 2
+    hg = Hypergraph.freeze(spark, inc, num_vertices=nv)
+    want = _peel_coreness(edges, nv)
+    runs = {k: coreness(hg, fused_steps=k) for k in (1, 2)}
+    for k, r in runs.items():
+        got = [0] * nv
+        for row in r.coreness.collect():
+            got[row["vertex_id"]] = row["coreness"]
+        assert got == want, k
+    assert runs[1].changes_per_iter == _jacobi_changes(edges, nv)
+    hg.unpersist()
+    # the fixture settles in one sweep; a path settles one vertex pair
+    # per sweep from both ends, so its sequence pins the schedule
+    path = [[i, i + 1] for i in range(12)]
+    hg = _freeze(spark, path, 13)
+    assert coreness(hg, fused_steps=1).changes_per_iter == _jacobi_changes(path, 13)
+    hg.unpersist()
+
+
+def test_coreness_singleton_edges_no_rounds(spark):
+    """Edges that are all singletons expand to no co-occurrence pairs:
+    every vertex has coreness 0 and no round runs."""
+    from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
+
+    hg = _freeze(spark, [[0], [1], [2], [3]], 4)
+    res = coreness(hg)
+    assert sorted(map(tuple, res.coreness.collect())) == [(v, 0) for v in range(4)]
+    assert res.iterations == 0
+    assert res.changes_per_iter == []
+    with pytest.raises(ValueError, match="fused_steps"):
+        coreness(hg, fused_steps=0)  # no sweep would read as converged
     hg.unpersist()

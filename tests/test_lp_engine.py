@@ -64,8 +64,8 @@ def test_superstep_parity_micro(spark, edges, labels, nv):
     hg.unpersist()
 
 
-@pytest.mark.parametrize("seed,strategy", [(1, "vector"), (7, "vector"), (1, "narrow")])
-def test_full_lp_parity_random(spark, seed, strategy):
+@pytest.mark.parametrize("seed", [1, 7])
+def test_full_lp_parity_random(spark, seed):
     nv = 60
     edges = _rng_hypergraph(seed, nv=nv, ne=120)
     rng = np.random.default_rng(seed + 1000)
@@ -74,8 +74,7 @@ def test_full_lp_parity_random(spark, seed, strategy):
     init[rng.choice(nv, size=5, replace=False)] = -1
 
     hg = _freeze(spark, edges, nv)
-    res = label_propagation(hg, labels_df(spark, init.tolist()), max_labels=6, max_iterations=100,
-                            strategy=strategy)
+    res = label_propagation(hg, labels_df(spark, init.tolist()), max_labels=6, max_iterations=100)
     want = oracle_label_propagation(edges, init, nv, max_labels=6, max_iterations=100)
     got = _collect_labels(res.labels, nv)
     assert got.tolist() == want.labels.tolist()
@@ -87,17 +86,15 @@ def test_full_lp_parity_random(spark, seed, strategy):
 
 def test_narrow_strategy_all_unlabeled_edge(spark):
     """An edge whose every member is unlabeled must still vote label 0
-    (all-zero counts rule) — the narrow strategy's universe-coalesce
-    path."""
+    (all-zero counts rule) — the narrow vote's universe-coalesce path."""
     edges = [[0, 1], [2, 3]]
     labels = [-1, -1, 4, 4]  # edge 0 fully unlabeled
     nv = 4
     hg = _freeze(spark, edges, nv)
     init = labels_df(spark, labels)
     want, _ = oracle_superstep(edges, np.array(labels, dtype=np.int32), nv)
-    for strategy in ("vector", "narrow"):
-        got = lp_superstep(hg, init, 10, strategy)
-        assert _collect_labels(got.select("vertex_id", "label"), nv).tolist() == want.tolist()
+    got = lp_superstep(hg, init, 10)
+    assert _collect_labels(got.select("vertex_id", "label"), nv).tolist() == want.tolist()
     hg.unpersist()
 
 

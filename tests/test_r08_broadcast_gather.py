@@ -1,6 +1,6 @@
 """r08 optimization pins: broadcast-gather vs shuffle-path parity for
-every iterative operator, the coreness 'cnt' sweep, the freeze scalar
-counts, and the bucketed-manifest counts + kind guard.
+every iterative operator, the freeze scalar counts, and the
+bucketed-manifest counts + kind guard.
 
 The broadcast path is a PLAN choice, never a semantics choice — these
 tests flip `spark.graft.gather.broadcast.maxRows` / the triangles
@@ -76,26 +76,17 @@ def test_cc_and_pagerank_broadcast_equals_shuffle(spark, hgx):
         assert pr_a[k] == pytest.approx(pr_b[k], abs=1e-12), k
 
 
-def test_coreness_broadcast_shuffle_and_cnt_sweep_identical(spark, hgx):
+def test_coreness_broadcast_equals_shuffle(spark, hgx):
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     try:
         _with_gather_rows(spark, 4_000_000)
-        arr = sorted(map(tuple, coreness(hgx).coreness.collect()))
-        cnt = sorted(map(tuple, coreness(hgx, sweep="cnt").coreness.collect()))
+        bcast = sorted(map(tuple, coreness(hgx).coreness.collect()))
         _with_gather_rows(spark, 0)
         shuf = sorted(map(tuple, coreness(hgx).coreness.collect()))
     finally:
         spark.conf.unset("spark.graft.gather.broadcast.maxRows")
-    assert arr == shuf
-    assert arr == cnt
-
-
-def test_coreness_rejects_unknown_sweep(spark, hgx):
-    from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
-
-    with pytest.raises(ValueError, match="unknown sweep"):
-        coreness(hgx, sweep="arrr")
+    assert bcast == shuf
 
 
 def test_triangles_broadcast_equals_shuffle(spark, hgx):

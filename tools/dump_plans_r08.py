@@ -74,49 +74,23 @@ def main() -> None:
         pr0 = pagerank_state_init(hg).localCheckpoint(eager=True)
         dump("pagerank_converged", pagerank_step(hg, pr0, 0.0, 0.85))
 
-    # coreness: one full arr sweep + round merge (the loop body shape).
-    from hypergraph_gpu_label_propagation_spark.operators import kcore as kcore_mod
+    # coreness: one fused round, built by the same helpers coreness() runs
+    from hypergraph_gpu_label_propagation_spark.operators.kcore import (
+        FUSED_STEPS,
+        coreness_adjacency,
+        coreness_round,
+    )
 
     half = clique_expansion(hg).localCheckpoint(eager=True)
-    if hasattr(kcore_mod, "coreness_round_frame"):
-        round_frame = kcore_mod.coreness_round_frame(hg, half, n_part)
-    else:
-        # round-start tree (before the r08 refactor): replicate the
-        # default arr/fused-4 round shape inline, byte-for-byte the
-        # loop body of coreness() at r07
-        from pyspark.sql import Window
-
-        sym = half.unionByName(
-            half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).localCheckpoint(eager=True)
-        adj = sym.repartition(n_part, "v").localCheckpoint(eager=True)
-        state = (
-            adj.groupBy("u")
-            .agg(F.count("*").cast("int").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        cur = state
-        for _ in range(4):
-            nb = adj.join(
-                cur.select(F.col("u").alias("v"), "c").hint("shuffle_hash"), "v"
-            ).select("u", "c")
-            arr = nb.groupBy("u").agg(
-                F.sort_array(F.collect_list("c"), asc=False).alias("_a")
-            )
-            cur = arr.select(
-                "u",
-                F.size(F.filter("_a", lambda x, i: x >= i + F.lit(1)))
-                .cast("int").alias("c"),
-            )
-        round_frame = (
-            state.select("u", F.col("c").alias("_c0"))
-            .join(cur.hint("shuffle_hash"), "u")
-            .select(
-                "u", "c", "_c0",
-                (F.col("c") != F.col("_c0")).cast("int").alias("_ch"),
-            )
-        )
-    dump("coreness_round", round_frame)
+    adj, core_part, _, use_bcast = coreness_adjacency(hg, half)
+    state = (
+        adj.groupBy("u")
+        .agg(F.count("*").cast("int").alias("c"))
+        .localCheckpoint(eager=True)
+    )
+    with loop_conf(spark, core_part):
+        dump("coreness_round", coreness_round(adj, state, FUSED_STEPS, use_bcast))
+    adj.unpersist()
 
     # triangle_count over the shared adjacency (bench shape): capture
     # the PRE-materialization agg plan (triangle_count() itself returns

@@ -5,7 +5,7 @@ parallelism level), freezes it, runs a FIXED number of LP supersteps
 (fixed work, no convergence variance), prints one JSON line.
 
 Usage: python tools/lp_scale_bench.py <incidence_parquet> <cores> \
-           [supersteps] [strategy] [ckpt_mode]
+           [supersteps] [ckpt_mode]
 
 ``ckpt_mode`` selects the per-superstep lineage-truncation mechanism:
 - ``local``    (default) localCheckpoint to executor block storage;
@@ -37,8 +37,7 @@ def main() -> None:
     path = sys.argv[1]
     cores = int(sys.argv[2])
     supersteps = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    strategy = sys.argv[4] if len(sys.argv) > 4 else "narrow"
-    ckpt_mode = sys.argv[5] if len(sys.argv) > 5 else "local"
+    ckpt_mode = sys.argv[4] if len(sys.argv) > 4 else "local"
 
     import os as _os
 
@@ -91,7 +90,7 @@ def main() -> None:
         # 100 TB run amortizes this in the first fraction of a percent of
         # the job, so steady-state is the honest cluster proxy)
         for _ in range(3):
-            warm = truncate(lp_superstep(hg, labels, 10, strategy))
+            warm = truncate(lp_superstep(hg, labels, 10))
             warm.agg(F.sum("changed")).collect()
             if ckpt_mode != "persist":
                 warm.unpersist()
@@ -107,7 +106,7 @@ def main() -> None:
             # action per superstep, exactly like the production loop
             # (a separate agg action was a constant extra job per step
             # that dragged scaling efficiency at every level).
-            step = lp_superstep(hg, labels, 10, strategy, labels_in_range=True)
+            step = lp_superstep(hg, labels, 10, labels_in_range=True)
             if ckpt_mode == "persist":  # no eager action to fuse into
                 stepped = truncate(step)
                 total_changes += int(stepped.agg(F.sum("changed")).collect()[0][0] or 0)
@@ -127,7 +126,6 @@ def main() -> None:
         "salt": salt,
         "no_broadcast": no_bcast,
         "ckpt_mode": ckpt_mode,
-        "strategy": strategy,
         "cores": cores,
         "supersteps": supersteps,
         "wall_sec": round(wall, 3),
