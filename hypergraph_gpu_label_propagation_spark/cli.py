@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
         res = label_propagation(
             hg, max_labels=max_labels, max_iterations=args.iterations,
             tolerance=args.tolerance, checkpoint_dir=args.checkpoint_dir,
-            resume=args.resume, verbose=True, weighted=args.weighted,
+            resume=args.resume, weighted=args.weighted,
         )
         out_df, iterations, converged = res.labels, res.iterations, res.converged
         extra = {

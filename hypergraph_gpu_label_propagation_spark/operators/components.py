@@ -10,8 +10,8 @@ min vertex id in the component.  Each superstep:
 i.e. one round of min-aggregation through the bipartite graph — the same
 join/agg shuffle shape as an LP superstep with ``min`` instead of the
 majority vote.  ``min`` is algebraic, so partial aggregation absorbs
-skew.  Converges in O(hypergraph diameter) supersteps; each superstep
-localCheckpoints to keep lineage flat.
+skew.  Converges in O(hypergraph diameter) supersteps, iterated by
+plans/loop.py::fixed_point.
 
 Round-shape rule (see plans/inspect.py::stats_size_bits and
 tests/test_plans.py::test_iterative_state_stats_stay_linear): the
@@ -28,11 +28,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
 
 
 @dataclass
@@ -105,50 +106,18 @@ def connected_components(
     incremental-CC streamer uses this).  Because min-propagation's fixed
     point is unique and labels only decrease, any valid warm start
     converges to the same answer as the cold run, just faster."""
-    from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
-        find_latest_snapshot,
-        write_snapshot,
-    )
-
-    start = 0
-    comp = None
-    if resume and checkpoint_dir:
-        found = find_latest_snapshot(hg.spark, checkpoint_dir, "cc")
-        if found is not None:
-            comp, start = found
-            comp = comp.select("vertex_id", "component")
-    if comp is None and initial is not None:
+    if initial is not None:
         comp = initial.select(
             F.col("vertex_id").cast("long"), F.col("component").cast("long")
         )
-    if comp is None:
+    else:
         comp = hg.vertices().select("vertex_id", F.col("vertex_id").alias("component"))
-    comp = comp.localCheckpoint(eager=True)
-    changes_per_iter: list[int] = []
-    converged = False
-    iterations = start
-    # loop-scoped tuning (plans/tuning.py): AQE off, data-sized partitions
     cores = hg.spark.sparkContext.defaultParallelism
-    with loop_conf(hg.spark, loop_partitions(hg.count_incidence(), cores)):
-        for it in range(start, max_iterations):
-            obs = Observation(f"cc_changes_{it}")
-            stepped = (
-                cc_superstep(hg, comp, pointer_jumping)
-                .observe(obs, F.sum("changed").alias("changes"))
-                .localCheckpoint(eager=True)
-            )
-            changes = obs.get["changes"] or 0
-            comp.unpersist()
-            comp = stepped.select("vertex_id", "component")
-            iterations = it + 1
-            changes_per_iter.append(int(changes))
-            if checkpoint_dir:
-                write_snapshot(
-                    comp, checkpoint_dir, "cc", iterations,
-                    {"op": "cc", "superstep": iterations, "changes": int(changes)},
-                )
-            if changes == 0:
-                converged = True
-                break
-    return CCResult(components=comp, iterations=iterations, converged=converged,
-                    changes_per_iter=changes_per_iter)
+    res = fixed_point(
+        "cc", comp, lambda state, _: cc_superstep(hg, state, pointer_jumping),
+        [F.sum("changed").alias("changes")], lambda row: row["changes"] == 0,
+        partitions=loop_partitions(hg.count_incidence(), cores),
+        max_iterations=max_iterations, checkpoint_dir=checkpoint_dir, resume=resume,
+    )
+    return CCResult(components=res.state, iterations=res.iterations, converged=res.converged,
+                    changes_per_iter=[r["changes"] for r in res.records])

@@ -5,8 +5,8 @@ covers the ordinary link-graph case (north rule: "a link-graph
 analytics engine ... over an edge table") for users whose input is
 already a pairwise edge list — web graphs, citation graphs, the
 clique-expanded projection.  Everything reuses the same design rules:
-co-partitioned cached layouts, algebraic partial aggregation, one
-observe()-fused action per iteration, localCheckpoint lineage cuts.
+co-partitioned cached layouts, algebraic partial aggregation, and the
+plans/loop.py::fixed_point loop.
 
 Semantics:
 - pagerank_edges: standard directed PageRank (Page et al. 1999),
@@ -24,9 +24,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -74,15 +76,11 @@ def pagerank_edges(
     if n == 0:
         raise ValueError("pagerank_edges: empty edge table (no vertices)")
     inv_out = e.groupBy("src").agg((F.lit(1.0) / F.count("*")).alias("inv_out"))
-    state = uni.join(
+    state0 = uni.join(
         inv_out, uni.vertex_id == inv_out.src, "left"
-    ).select("vertex_id", F.lit(1.0 / n).alias("rank"), "inv_out").localCheckpoint(eager=True)
-    dangling = state.filter(F.col("inv_out").isNull()).count() / float(n)
+    ).select("vertex_id", F.lit(1.0 / n).alias("rank"), "inv_out")
 
-    deltas: list[float] = []
-    converged = False
-    iterations = 0
-    for it in range(max_iterations):
+    def step(state: DataFrame, row: dict) -> DataFrame:
         contrib = state.filter(F.col("inv_out").isNotNull()).select(
             F.col("vertex_id").alias("src"), (F.col("rank") * F.col("inv_out")).alias("c")
         )
@@ -91,36 +89,32 @@ def pagerank_edges(
             .groupBy(F.col("dst").alias("vertex_id"))
             .agg(F.sum("c").alias("g"))
         )
-        base = (1.0 - damping) / n + damping * dangling / n
-        obs = Observation(f"epr_{it}")
-        new = (
-            state.join(gathered, "vertex_id", "left")
-            .select(
-                "vertex_id",
-                (F.lit(base) + F.lit(damping) * F.coalesce("g", F.lit(0.0))).alias("rank"),
-                "inv_out",
-                F.col("rank").alias("_old"),
-            )
-            .observe(
-                obs,
-                F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-                F.sum(F.when(F.col("inv_out").isNull(), F.col("rank"))).alias("dang"),
-            )
-            .localCheckpoint(eager=True)
+        base = (1.0 - damping) / n + damping * float(row["dang"]) / n
+        return state.join(gathered, "vertex_id", "left").select(
+            "vertex_id",
+            (F.lit(base) + F.lit(damping) * F.coalesce("g", F.lit(0.0))).alias("rank"),
+            "inv_out",
+            F.col("rank").alias("_old"),
         )
-        row = obs.get
-        delta = float(row["delta"] or 0.0)
-        dangling = float(row["dang"] or 0.0)
-        state.unpersist()
-        state = new.drop("_old")
-        iterations = it + 1
-        deltas.append(delta)
-        if delta < tol:
-            converged = True
-            break
+
+    dangling = F.col("inv_out").isNull()
+    res = fixed_point(
+        "pagerank_edges", state0, step,
+        [F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
+         F.sum(F.when(dangling, F.col("rank"))).alias("dang")],
+        # the init row carries no delta
+        lambda row: "delta" in row and row["delta"] < tol,
+        partitions=int(spark.conf.get("spark.sql.shuffle.partitions")), adaptive=True,
+        max_iterations=max_iterations,
+        # uniform start: dangling mass = dangling count / n
+        init_observe=[(F.count(F.when(dangling, 1)) / F.lit(float(n))).alias("dang")],
+    )
     e.unpersist()
     uni.unpersist()
-    return EdgePageRankResult(state.select("vertex_id", "rank"), iterations, converged, deltas)
+    return EdgePageRankResult(
+        res.state.select("vertex_id", "rank"), res.iterations, res.converged,
+        [float(r["delta"]) for r in res.records],
+    )
 
 
 @dataclass
@@ -137,39 +131,29 @@ def connected_components_edges(edges: DataFrame, max_iterations: int = 200) -> E
     # universe from the ORIGINAL edges: vertices whose only edges are
     # self-loops disappear from the symmetrized adjacency but are still
     # vertices (each its own singleton component)
-    comp = vertex_universe(edges).select(
-        "vertex_id", F.col("vertex_id").alias("component")
-    ).localCheckpoint(eager=True)
-    converged = False
-    iterations = 0
-    for it in range(max_iterations):
+    comp = vertex_universe(edges).select("vertex_id", F.col("vertex_id").alias("component"))
+
+    def step(comp: DataFrame, _) -> DataFrame:
         nbr_min = (
             adj.join(comp, adj.src == comp.vertex_id)
             .groupBy(F.col("dst").alias("vertex_id"))
             .agg(F.min("component").alias("nbr"))
         )
-        obs = Observation(f"ecc_{it}")
-        new = (
-            comp.join(nbr_min, "vertex_id", "left")
-            .select(
-                "vertex_id",
-                F.least("component", F.coalesce("nbr", "component")).alias("component"),
-                (
-                    F.least("component", F.coalesce("nbr", "component")) != F.col("component")
-                ).cast("int").alias("changed"),
-            )
-            .observe(obs, F.sum("changed").alias("changes"))
-            .localCheckpoint(eager=True)
+        return comp.join(nbr_min, "vertex_id", "left").select(
+            "vertex_id",
+            F.least("component", F.coalesce("nbr", "component")).alias("component"),
+            (
+                F.least("component", F.coalesce("nbr", "component")) != F.col("component")
+            ).cast("int").alias("changed"),
         )
-        changes = obs.get["changes"] or 0
-        comp.unpersist()
-        comp = new.select("vertex_id", "component")
-        iterations = it + 1
-        if changes == 0:
-            converged = True
-            break
+
+    res = fixed_point(
+        "cc_edges", comp, step, [F.sum("changed").alias("changes")],
+        lambda row: row["changes"] == 0,
+        partitions=parts, adaptive=True, max_iterations=max_iterations,
+    )
     adj.unpersist()
-    return EdgeCCResult(comp, iterations, converged)
+    return EdgeCCResult(res.state, res.iterations, res.converged)
 
 
 def triangle_count_edges(edges: DataFrame) -> DataFrame:

@@ -17,13 +17,11 @@ O(convergence sweeps) instead of O(max-degree) peel levels,
 which is the right shape at 100 TB (rounds ~ tens; peel levels can be
 thousands on heavy-tailed graphs).
 
-:func:`k_core` execution shape (same discipline as LP/CC,
-label_propagation.py):
-- adjacency built once, localCheckpointed (GC-reclaimed);
+:func:`k_core` execution shape (both loops run on plans/loop.py::
+fixed_point):
+- adjacency built once;
 - per round: one degree aggregation over alive edges + one semi-join —
   both algebraic/narrow, skew absorbed by partial aggregation;
-- one observe()-fused action per round (removed-count rides the
-  checkpoint job); loop-scoped conf via plans/tuning.py;
 - O(rounds) = O(peeling depth), each round strictly shrinks or stops.
 
 The DuckDB oracle twin replicates the peel as a recursive CTE carrying
@@ -35,17 +33,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
-from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
-    find_latest_snapshot,
-    write_snapshot,
-)
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
 
 
 @dataclass
@@ -92,46 +87,37 @@ def k_core(
     def _alive_join(frame):
         return F.broadcast(frame) if use_bcast else frame
 
-    alive = adj.select("u").distinct().localCheckpoint(eager=True)
-    n_alive = alive.count()
-    removed_per_iter: list[int] = []
-    iterations = 0
-    with loop_conf(hg.spark, n_part):
-        for _ in range(max_iterations):
-            deg = (
-                adj.join(_alive_join(alive), "u")
-                .join(_alive_join(alive.select(F.col("u").alias("v"))), "v")
-                .groupBy("u")
-                .agg(F.count("*").alias("_d"))
-            )
-            obs = Observation(f"kcore_{iterations}")
-            survivors = (
-                alive.join(deg.filter(F.col("_d") >= k).select("u"), "u", "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            n_alive_new = int(obs.get["n"] or 0)
-            alive.unpersist()
-            alive = survivors
-            iterations += 1
-            removed_per_iter.append(n_alive - n_alive_new)
-            stable = n_alive_new == n_alive
-            n_alive = n_alive_new
-            if stable or n_alive_new == 0:
-                break
+    def peel(alive: DataFrame, _) -> DataFrame:
+        deg = (
+            adj.join(_alive_join(alive), "u")
+            .join(_alive_join(alive.select(F.col("u").alias("v"))), "v")
+            .groupBy("u")
+            .agg(F.count("*").alias("_d"))
+        )
+        return alive.join(deg.filter(F.col("_d") >= k).select("u"), "u", "left_semi")
+
+    n = F.count(F.lit(1))
+    res = fixed_point(
+        "k_core", adj.select("u").distinct(), peel,
+        lambda row: [n.alias("alive"), (F.lit(row["alive"]) - n).alias("removed")],
+        # stable or empty; the init row has no removal, so a run peels
+        # at least one round
+        lambda row: "removed" in row and (row["removed"] == 0 or row["alive"] == 0),
+        partitions=n_part, max_iterations=max_iterations, init_observe=[n.alias("alive")],
+    )
     membership = (
         hg.vertices()
-        .join(alive.select(F.col("u").alias("vertex_id"), F.lit(1).alias("_in")), "vertex_id", "left")
+        .join(res.state.select(F.col("u").alias("vertex_id"), F.lit(1).alias("_in")),
+              "vertex_id", "left")
         .select("vertex_id", F.coalesce("_in", F.lit(0)).cast("int").alias("in_core"))
     )
-    core_size = int(membership.agg(F.sum("in_core")).collect()[0][0] or 0)
     if use_bcast:
         adj.unpersist()  # loop-local cache; alive is checkpointed
     return KCoreResult(
         membership=membership,
-        iterations=iterations,
-        core_size=core_size,
-        removed_per_iter=removed_per_iter,
+        iterations=res.iterations,
+        core_size=res.row["alive"],
+        removed_per_iter=[r["removed"] for r in res.records],
     )
 
 
@@ -286,66 +272,43 @@ def coreness(
     half = clique_expansion(hg) if adj is None else adj
     adj, n_part, n_pairs, use_bcast = coreness_adjacency(hg, half)
 
-    start = 0
-    state = None
-    changes = n_pairs  # a fresh run has work iff the graph has pairs
-    if resume and checkpoint_dir:
-        found = find_latest_snapshot(hg.spark, checkpoint_dir, "coreness")
-        if found is not None:
-            snap, start = found
-            state = snap.select("u", "c").localCheckpoint(eager=True)
-            # a converged snapshot (all _ch zero) runs no further round
-            changes = snap.filter(F.col("_ch") == 1).count()
-    if state is None:
-        # int state: c <= max expansion degree < 2^31; counts over
-        # vertices (the H_g histogram) stay long
-        deg = adj.groupBy("u").agg(F.count("*").cast("int").alias("c"))
-        if init_cap:
-            hist = deg.groupBy("c").agg(F.count("*").alias("_n"))
-            cum = (
-                hist.alias("a")
-                .join(hist.alias("b"), F.col("b.c") >= F.col("a.c"))
-                .groupBy(F.col("a.c").alias("c"))
-                .agg(F.sum("b._n").alias("_cum"))
-            )
-            # _cum stays long inside the least: an int cast would wrap
-            # past 2^31 vertices and cap c0 below the true coreness
-            hglob = cum.agg(
-                F.max(F.least(F.col("c").cast("long"), F.col("_cum")))
-                .cast("int")
-                .alias("_hg")
-            )
-            deg = deg.crossJoin(F.broadcast(hglob)).select(
-                "u", F.least("c", "_hg").cast("int").alias("c")
-            )
-        state = deg.localCheckpoint(eager=True)
-    iterations = start
-    changes_per_iter: list[int] = []
-    with loop_conf(hg.spark, n_part):
-        while changes and iterations < max_iterations:
-            obs = Observation(f"coreness_{iterations}")
-            new_state = (
-                coreness_round(adj, state, fused_steps, use_bcast)
-                .observe(obs, F.sum("_ch").alias("ch"))
-                .localCheckpoint(eager=True)
-            )
-            changes = int(obs.get["ch"] or 0)
-            state.unpersist()
-            state = new_state.select("u", "c")
-            iterations += 1
-            changes_per_iter.append(changes)
-            if checkpoint_dir:
-                # _ch rides the snapshot so a resume knows if it converged
-                write_snapshot(
-                    new_state, checkpoint_dir, "coreness", iterations,
-                    {"op": "coreness", "superstep": iterations, "changes": changes},
-                )
+    # int state: c <= max expansion degree < 2^31; counts over
+    # vertices (the H_g histogram) stay long
+    deg = adj.groupBy("u").agg(F.count("*").cast("int").alias("c"))
+    if init_cap:
+        hist = deg.groupBy("c").agg(F.count("*").alias("_n"))
+        cum = (
+            hist.alias("a")
+            .join(hist.alias("b"), F.col("b.c") >= F.col("a.c"))
+            .groupBy(F.col("a.c").alias("c"))
+            .agg(F.sum("b._n").alias("_cum"))
+        )
+        # _cum stays long inside the least: an int cast would wrap
+        # past 2^31 vertices and cap c0 below the true coreness
+        hglob = cum.agg(
+            F.max(F.least(F.col("c").cast("long"), F.col("_cum")))
+            .cast("int")
+            .alias("_hg")
+        )
+        deg = deg.crossJoin(F.broadcast(hglob)).select(
+            "u", F.least("c", "_hg").cast("int").alias("c")
+        )
+    res = fixed_point(
+        "coreness", deg,
+        lambda state, _: coreness_round(adj, state, fused_steps, use_bcast),
+        [F.sum("_ch").alias("changes")], lambda row: row["changes"] == 0,
+        partitions=n_part,
+        # a fresh run has work iff the graph has pairs
+        max_iterations=max_iterations if n_pairs else 0,
+        checkpoint_dir=checkpoint_dir, resume=resume,
+    )
     out = (
         hg.vertices()
-        .join(state.select(F.col("u").alias("vertex_id"), "c"), "vertex_id", "left")
+        .join(res.state.select(F.col("u").alias("vertex_id"), "c"), "vertex_id", "left")
         .select("vertex_id", F.coalesce("c", F.lit(0)).cast("int").alias("coreness"))
     )
     adj.unpersist()  # loop-local cache (state is checkpointed, not derived from it)
     return CorenessResult(
-        coreness=out, iterations=iterations, changes_per_iter=changes_per_iter
+        coreness=out, iterations=res.iterations,
+        changes_per_iter=[r["changes"] for r in res.records],
     )

@@ -51,12 +51,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf
+from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+    _triangles_broadcast_rows,
+    _wedge_partitions,
+    clique_expansion,
+    packed_pair_key,
+)
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
 
 
 @dataclass
@@ -81,21 +86,15 @@ def k_truss(
         raise ValueError("k-truss needs k >= 3 (k-2 triangles per edge)")
     # distinct u < v
     base = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
-    n_alive = base.count()
-    removed_per_iter: list[int] = []
-    iterations = 0
-    # partitions sized from the EXPANSION, not the incidence (the sf1
-    # audit measured the wedge-heavy peel 12.7x at 10x data under the
-    # incidence-sized conf — same spill mechanism as triangle_count;
-    # see triangles.PAIRS_PER_PARTITION and BENCH_SCALING.md r05)
-    from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-        _wedge_partitions,
-    )
+    n_pairs = base.count()
 
     def _swap(df: DataFrame) -> DataFrame:
         return df.select(F.col("v").alias("u"), F.col("u").alias("v"))
 
     below = F.col("_c") < k - 2
+    # base expansion in both directions — the CONSTANT-stats wedge side
+    # for every per-round join (checkpointed once)
+    sym_base = base.unionByName(_swap(base)).localCheckpoint(eager=True)
 
     def _count_support(anchor: DataFrame, alive_sym: DataFrame) -> DataFrame:
         """(u, v, _c>0) for anchor edges: #w with (u,w) and (v,w) in
@@ -112,186 +111,161 @@ def k_truss(
         )
         return tri.groupBy("u", "v").agg(F.count("*").alias("_c"))
 
-    with loop_conf(hg.spark, _wedge_partitions(hg.spark, n_alive), adaptive=True):
-        # base expansion in both directions — the CONSTANT-stats wedge
-        # side for every per-round join (checkpointed once)
-        sym_base = base.unionByName(_swap(base)).localCheckpoint(eager=True)
-
-        # round 0: full support, the ONLY full triangle pass — the
-        # ORIENTED u < v < w wedge shape (same as triangle_count: wedge
-        # volume sum_v lo(v)*hi(v), not the anchored sum_u hi(u)*deg(u)
-        # whose hi^2 hub term measured 14x slower at sf1), closed by an
-        # INNER join so each triangle row credits all three of its
-        # edges.  Edges in no triangle keep an explicit 0 row (union
-        # merge, not a join — see the stats discipline in the module
-        # doc); the observe pre-counts next round's removals so the
-        # strategy choice is action-free.
-        # r08 (guide §2.4): broadcast the pair set in the seeding pass
-        # when it fits (triangles.TRIANGLES_BROADCAST_MAX_ROWS) — the
-        # wedge intermediate is then never exchanged; over the
-        # threshold the r06 shuffle shape runs unchanged
-        from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-            _triangles_broadcast_rows,
-            packed_pair_key,
-        )
-
-        _use_bcast0 = n_alive <= _triangles_broadcast_rows(hg.spark)
-        _maybe_bcast = F.broadcast if _use_bcast0 else (lambda df: df)
-        wedges0 = base.join(
-            _maybe_bcast(base.select(F.col("u").alias("v"), F.col("v").alias("w"))),
-            "v",
-        )
-        if _use_bcast0 and 0 < hg.num_vertices < 2**31:
-            # packed single-long closing key (LongHashedRelation; see
-            # triangles._oriented_triangles) — base pairs are unique so
-            # the inner join's multiplicity is unchanged
-            tri0 = (
-                wedges0.withColumn("_uw", packed_pair_key("u", "w"))
-                .join(
-                    F.broadcast(base.select(packed_pair_key("u", "v").alias("_uw"))),
-                    "_uw",
-                )
-                .drop("_uw")
+    # round 0: full support, the ONLY full triangle pass — the
+    # ORIENTED u < v < w wedge shape (same as triangle_count: wedge
+    # volume sum_v lo(v)*hi(v), not the anchored sum_u hi(u)*deg(u)
+    # whose hi^2 hub term measured 14x slower at sf1), closed by an
+    # INNER join so each triangle row credits all three of its
+    # edges.  Edges in no triangle keep an explicit 0 row (union
+    # merge, not a join — see the stats discipline in the module
+    # doc); the init observation pre-counts next round's removals so
+    # the strategy choice is action-free.
+    # r08 (guide §2.4): broadcast the pair set in the seeding pass
+    # when it fits (triangles.TRIANGLES_BROADCAST_MAX_ROWS) — the
+    # wedge intermediate is then never exchanged; over the
+    # threshold the r06 shuffle shape runs unchanged
+    _use_bcast0 = n_pairs <= _triangles_broadcast_rows(hg.spark)
+    _maybe_bcast = F.broadcast if _use_bcast0 else (lambda df: df)
+    wedges0 = base.join(
+        _maybe_bcast(base.select(F.col("u").alias("v"), F.col("v").alias("w"))),
+        "v",
+    )
+    if _use_bcast0 and 0 < hg.num_vertices < 2**31:
+        # packed single-long closing key (LongHashedRelation; see
+        # triangles._oriented_triangles) — base pairs are unique so
+        # the inner join's multiplicity is unchanged
+        tri0 = (
+            wedges0.withColumn("_uw", packed_pair_key("u", "w"))
+            .join(
+                F.broadcast(base.select(packed_pair_key("u", "v").alias("_uw"))),
+                "_uw",
             )
+            .drop("_uw")
+        )
+    else:
+        tri0 = wedges0.join(
+            _maybe_bcast(base.select("u", F.col("v").alias("w"))), ["u", "w"]
+        )
+    cnt0 = (
+        tri0.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("u"), F.col("v")),
+                    F.struct(F.col("u"), F.col("w").alias("v")),
+                    F.struct(F.col("v").alias("u"), F.col("w").alias("v")),
+                )
+            ).alias("_e")
+        )
+        .select("_e.u", "_e.v")
+        .groupBy("u", "v")
+        .agg(F.count("*").cast("long").alias("_c"))
+    )
+    supp0 = (
+        base.select("u", "v", F.lit(0).cast("long").alias("_c"))
+        .unionByName(cnt0)
+        .groupBy("u", "v")
+        .agg(F.sum("_c").alias("_c"))
+    )
+
+    def peel(supp: DataFrame, row: dict) -> DataFrame:
+        removed = supp.filter(below).select("u", "v")
+        survivors = supp.filter(~below)
+        if row["below"] >= row["alive"] - row["below"]:
+            # mass peel: recompute support inside the survivor set
+            sym_surv = survivors.select("u", "v").unionByName(
+                _swap(survivors.select("u", "v"))
+            )
+            merged = survivors.select(
+                "u", "v", F.lit(0).cast("long").alias("_c")
+            ).unionByName(_count_support(survivors.select("u", "v"), sym_surv))
         else:
-            tri0 = wedges0.join(
-                _maybe_bcast(base.select("u", F.col("v").alias("w"))), ["u", "w"]
+            # incremental: decrement by destroyed-triangle counts.
+            # D1: anchored on removed (u,v); w must be old-alive on
+            # both sides; credit the two cross edges (normalized
+            # u < v).  A destroyed triangle credits a surviving
+            # edge once per removed edge it contains...
+            alive_pairs = supp.select("u", "v")
+            sym_old = alive_pairs.unionByName(_swap(alive_pairs))
+            cand = removed.join(
+                sym_base.select("u", F.col("v").alias("w")), "u"
+            ).filter(F.col("w") != F.col("v"))
+            cand = cand.join(
+                sym_old.select(F.col("u"), F.col("v").alias("w")),
+                ["u", "w"], "left_semi",
             )
-        cnt0 = (
-            tri0.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("u"), F.col("v")),
-                        F.struct(F.col("u"), F.col("w").alias("v")),
-                        F.struct(F.col("v").alias("u"), F.col("w").alias("v")),
-                    )
-                ).alias("_e")
+            destroyed = cand.join(
+                sym_old.select(F.col("u").alias("v"), F.col("v").alias("w")),
+                ["v", "w"], "left_semi",
             )
-            .select("_e.u", "_e.v")
-            .groupBy("u", "v")
-            .agg(F.count("*").cast("long").alias("_c"))
-        )
-        obs0 = Observation("ktruss_init")
-        supp = (
-            base.select("u", "v", F.lit(0).cast("long").alias("_c"))
-            .unionByName(cnt0)
-            .groupBy("u", "v")
-            .agg(F.sum("_c").alias("_c"))
-            .observe(
-                obs0,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(below.cast("long")).alias("r"),
+            d1 = (
+                destroyed.select(
+                    F.explode(
+                        F.array(
+                            F.struct(
+                                F.least("u", "w").alias("u"),
+                                F.greatest("u", "w").alias("v"),
+                            ),
+                            F.struct(
+                                F.least("v", "w").alias("u"),
+                                F.greatest("v", "w").alias("v"),
+                            ),
+                        )
+                    ).alias("_e")
+                )
+                .select("_e.u", "_e.v")
+                .groupBy("u", "v")
+                .agg((-F.count("*")).alias("_c"))
+                .join(supp.filter(~below), ["u", "v"], "left_semi")
             )
-            .localCheckpoint(eager=True)
-        )
-        n_alive = int(obs0.get["n"] or 0)
-        n_removed = int(obs0.get["r"] or 0)
+            # ...D2 adds back the double-credit for triangles whose
+            # OTHER two edges were BOTH removed (they share exactly
+            # one vertex w): anchored on removed (x,w), y from w's
+            # base neighbors, (y,w) must also be removed, (x,y)
+            # surviving; x < y counts each triangle once.
+            sym_rem = removed.unionByName(_swap(removed))
+            d2 = (
+                sym_rem.select(F.col("u").alias("x"), F.col("v").alias("w"))
+                .join(
+                    sym_base.select(F.col("u").alias("w"), F.col("v").alias("y")),
+                    "w",
+                )
+                .filter(F.col("x") < F.col("y"))
+                .join(
+                    sym_rem.select(F.col("u").alias("y"), F.col("v").alias("w")),
+                    ["y", "w"], "left_semi",
+                )
+                .select(F.col("x").alias("u"), F.col("y").alias("v"))
+                .join(supp.filter(~below), ["u", "v"], "left_semi")
+                .groupBy("u", "v")
+                .agg(F.count("*").alias("_c"))
+            )
+            merged = survivors.unionByName(d1).unionByName(d2)
 
-        for _ in range(max_iterations):
-            if n_removed == 0:
-                break
-            removed = supp.filter(below).select("u", "v")
-            survivors = supp.filter(~below)
-            n_surv = n_alive - n_removed
+        return merged.groupBy("u", "v").agg(F.sum("_c").alias("_c"))
 
-            if n_removed >= n_surv:
-                # mass peel: recompute support inside the survivor set
-                sym_surv = survivors.select("u", "v").unionByName(
-                    _swap(survivors.select("u", "v"))
-                )
-                merged = survivors.select(
-                    "u", "v", F.lit(0).cast("long").alias("_c")
-                ).unionByName(_count_support(survivors.select("u", "v"), sym_surv))
-            else:
-                # incremental: decrement by destroyed-triangle counts.
-                # D1: anchored on removed (u,v); w must be old-alive on
-                # both sides; credit the two cross edges (normalized
-                # u < v).  A destroyed triangle credits a surviving
-                # edge once per removed edge it contains...
-                alive_pairs = supp.select("u", "v")
-                sym_old = alive_pairs.unionByName(_swap(alive_pairs))
-                cand = removed.join(
-                    sym_base.select("u", F.col("v").alias("w")), "u"
-                ).filter(F.col("w") != F.col("v"))
-                cand = cand.join(
-                    sym_old.select(F.col("u"), F.col("v").alias("w")),
-                    ["u", "w"], "left_semi",
-                )
-                destroyed = cand.join(
-                    sym_old.select(F.col("u").alias("v"), F.col("v").alias("w")),
-                    ["v", "w"], "left_semi",
-                )
-                d1 = (
-                    destroyed.select(
-                        F.explode(
-                            F.array(
-                                F.struct(
-                                    F.least("u", "w").alias("u"),
-                                    F.greatest("u", "w").alias("v"),
-                                ),
-                                F.struct(
-                                    F.least("v", "w").alias("u"),
-                                    F.greatest("v", "w").alias("v"),
-                                ),
-                            )
-                        ).alias("_e")
-                    )
-                    .select("_e.u", "_e.v")
-                    .groupBy("u", "v")
-                    .agg((-F.count("*")).alias("_c"))
-                    .join(supp.filter(~below), ["u", "v"], "left_semi")
-                )
-                # ...D2 adds back the double-credit for triangles whose
-                # OTHER two edges were BOTH removed (they share exactly
-                # one vertex w): anchored on removed (x,w), y from w's
-                # base neighbors, (y,w) must also be removed, (x,y)
-                # surviving; x < y counts each triangle once.
-                sym_rem = removed.unionByName(_swap(removed))
-                d2 = (
-                    sym_rem.select(F.col("u").alias("x"), F.col("v").alias("w"))
-                    .join(
-                        sym_base.select(F.col("u").alias("w"), F.col("v").alias("y")),
-                        "w",
-                    )
-                    .filter(F.col("x") < F.col("y"))
-                    .join(
-                        sym_rem.select(F.col("u").alias("y"), F.col("v").alias("w")),
-                        ["y", "w"], "left_semi",
-                    )
-                    .select(F.col("x").alias("u"), F.col("y").alias("v"))
-                    .join(supp.filter(~below), ["u", "v"], "left_semi")
-                    .groupBy("u", "v")
-                    .agg(F.count("*").alias("_c"))
-                )
-                merged = survivors.unionByName(d1).unionByName(d2)
-
-            obs = Observation(f"ktruss_{iterations}")
-            new_supp = (
-                merged.groupBy("u", "v")
-                .agg(F.sum("_c").alias("_c"))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(below.cast("long")).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            n_new = int(obs.get["n"] or 0)
-            supp.unpersist()
-            supp = new_supp
-            iterations += 1
-            removed_per_iter.append(n_alive - n_new)
-            n_alive = n_new
-            n_removed = int(obs.get["r"] or 0)
-            if n_new == 0:
-                break
-        sym_base.unpersist()
+    n = F.count(F.lit(1))
+    n_below = F.sum(below.cast("long")).alias("below")
+    # partitions sized from the EXPANSION, not the incidence (the sf1
+    # audit measured the wedge-heavy peel 12.7x at 10x data under the
+    # incidence-sized conf — same spill mechanism as triangle_count;
+    # see triangles.PAIRS_PER_PARTITION and BENCH_SCALING.md r05); the
+    # seeding pass runs in that scope too
+    res = fixed_point(
+        "k_truss", supp0, peel,
+        lambda row: [n.alias("alive"), n_below,
+                     (F.lit(row["alive"]) - n).alias("removed")],
+        # nothing below k-2 (an empty set included)
+        lambda row: row["below"] == 0,
+        partitions=_wedge_partitions(hg.spark, n_pairs), adaptive=True,
+        max_iterations=max_iterations, init_observe=[n.alias("alive"), n_below],
+        scoped_init=True,
+    )
     membership = base.join(
-        supp.select("u", "v", F.lit(1).alias("_in")), ["u", "v"], "left"
+        res.state.select("u", "v", F.lit(1).alias("_in")), ["u", "v"], "left"
     ).select("u", "v", F.coalesce("_in", F.lit(0)).cast("int").alias("in_truss"))
     return KTrussResult(
         membership=membership,
-        iterations=iterations,
-        truss_size=n_alive,
-        removed_per_iter=removed_per_iter,
+        iterations=res.iterations,
+        truss_size=res.row["alive"],
+        removed_per_iter=[r["removed"] for r in res.records],
     )

@@ -10,10 +10,9 @@ backends identical — src/openmp/label_propagation_openmp.cpp:58-158):
 3. changes = count(new != old); stop iff changes/nv < tolerance
    (strict <, checked after applying the update)
 
-The driver loop crosses the Python/JVM boundary exactly where the
-reference crosses host/device: at superstep launch (one Spark job) and
-at the change-count reduction (one collected scalar — the analog of the
-reference's device->host ``changes`` copy, cuda.cu:275-277).
+The loop itself (one Spark job per superstep with the change count
+observed on it, lineage truncation, snapshots and resume) is
+plans/loop.py::fixed_point.
 
 Scale design:
 - both joins hit the pre-partitioned incidence layouts (the frozen
@@ -21,19 +20,14 @@ Scale design:
   shuffle each superstep;
 - the majority kernel is a narrow (key, label, count) aggregation per
   phase (see operators/majority.py) — map-side partial aggregation
-  absorbs hyperedge/vertex skew exactly;
-- ``localCheckpoint`` per superstep truncates lineage so plan size stays
-  O(1) in the iteration count;
-- optional durable checkpointing writes the label state + metrics per
-  superstep so a killed run resumes mid-iteration (north rule).
+  absorbs hyperedge/vertex skew exactly.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
@@ -41,11 +35,8 @@ from hypergraph_gpu_label_propagation_spark.operators.majority import (
     majority_label,
     majority_label_grouped_sql,
 )
-from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
-    find_latest_snapshot,
-    write_snapshot,
-)
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
 
 DEFAULT_MAX_LABELS = 10  # argparse.cpp:277 / cuda.cu:13
 
@@ -194,9 +185,7 @@ def label_propagation(
     max_iterations: int = 100,
     tolerance: float = 1e-6,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
     resume: bool = False,
-    verbose: bool = False,
     weighted: bool = False,
 ) -> LPResult:
     """Run LP to convergence (reference loop openmp:58-158, defaults
@@ -204,11 +193,7 @@ def label_propagation(
 
     Round-shape rule: each superstep references the checkpointed label
     state on only ONE side of any stats-multiplied join (the other side
-    is always the frozen incidence layout), so Catalyst's sizeInBytes
-    estimate grows linearly in supersteps — see
-    plans/inspect.py::stats_size_bits and tests/test_plans.py::
-    test_iterative_state_stats_stay_linear for the BigInt planning
-    pathology a state-squared shape causes.
+    is always the frozen incidence layout).
 
     ``checkpoint_dir`` enables durable per-superstep snapshots (labels
     parquet + metrics jsonl) for mid-run resume; ``resume=True`` picks
@@ -221,74 +206,34 @@ def label_propagation(
         F.col("vertex_id").cast("long").alias("vertex_id"),
         F.col("label").cast("int").alias("label"),
     )
-    start_step = 0
-    if resume and checkpoint_dir:
-        found = find_latest_snapshot(hg.spark, checkpoint_dir, "labels")
-        if found is not None:
-            labels, start_step = found
-            if verbose:
-                print(f"[lp] resuming from superstep {start_step}")
-
     nv = float(hg.num_vertices)
     if nv == 0:
         # reference guard: an empty hypergraph converges trivially with 0
         # iterations (label_propagation_openmp.cpp:23-29) — also keeps the
         # changes/nv convergence ratio below well-defined
-        return LPResult(labels=labels, iterations=start_step, converged=True, metrics=[])
+        return LPResult(labels=labels, iterations=0, converged=True, metrics=[])
 
-    labels = labels.localCheckpoint(eager=True)
-    metrics: list[SuperstepMetrics] = []
-    converged = False
-    iterations = start_step
+    def step(state: DataFrame, row: dict) -> DataFrame:
+        # phase-2 output is always in [0, max_labels): from the second
+        # superstep (or after a resume, whose snapshot is phase-2 output)
+        # the sentinel path is dead code
+        return lp_superstep(
+            hg, state, max_labels,
+            labels_in_range=row["superstep"] > 0, weighted=weighted,
+        )
 
-    # loop-scoped tuning: AQE off (its per-exchange barriers dominate the
-    # superstep; the loop's frame shapes are known and stable) and
-    # shuffle partitions sized to the incidence data — see plans/tuning.py
     cores = hg.spark.sparkContext.defaultParallelism
-    with loop_conf(hg.spark, loop_partitions(hg.count_incidence(), cores)):
-        for step in range(start_step, max_iterations):
-            t0 = time.monotonic()
-            # observe() folds the change-count reduction into the same job
-            # that materializes the checkpoint — ONE Spark action per
-            # superstep (the reference's single device->host barrier)
-            obs = Observation(f"lp_changes_{step}")
-            stepped = (
-                lp_superstep(
-                    hg, labels, max_labels,
-                    # phase-2 output is always in [0, max_labels): from the
-                    # second superstep (or after a resume, whose snapshot is
-                    # phase-2 output) the sentinel path is dead code
-                    labels_in_range=(step > start_step or (resume and start_step > 0)),
-                    weighted=weighted,
-                )
-                .observe(obs, F.sum("changed").alias("changes"))
-                .localCheckpoint(eager=True)
-            )
-            changes = obs.get["changes"] or 0
-            # memory-lifetime note (r06 review): unpersist() only clears
-            # cacheManager entries, so on a localCheckpoint-backed frame
-            # it is a no-op — the checkpointed blocks are actually freed
-            # when the superseded frame is GC'd on the driver and the
-            # ContextCleaner collects its RDD.  The rebinding below is
-            # what releases memory; the unpersist stays for the cases
-            # where a caller passed a persist()-ed initial frame.
-            labels.unpersist()
-            labels = stepped.select("vertex_id", "label")
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            iterations = step + 1
-            m = SuperstepMetrics(iterations, int(changes), changes / nv if nv else 0.0, wall_ms)
-            metrics.append(m)
-            if verbose and iterations % 10 == 0:
-                print(f"[lp] superstep {iterations}: changes={changes}")
-            if checkpoint_dir and (iterations % checkpoint_every == 0):
-                # frontier size (= changes) + per-partition lineage ride
-                # the snapshot (north rule resumability metadata)
-                write_snapshot(
-                    labels, checkpoint_dir, "labels", iterations, m.__dict__,
-                    manifest_extra={"frontier": int(changes)},
-                )
-            if changes / nv < tolerance:  # strict <, post-update (openmp:148-154)
-                converged = True
-                break
-
-    return LPResult(labels=labels, iterations=iterations, converged=converged, metrics=metrics)
+    res = fixed_point(
+        "lp", labels, step, [F.sum("changed").alias("changes")],
+        # strict <, post-update (openmp:148-154)
+        lambda row: row["changes"] / nv < tolerance,
+        partitions=loop_partitions(hg.count_incidence(), cores),
+        max_iterations=max_iterations, checkpoint_dir=checkpoint_dir, resume=resume,
+    )
+    metrics = [
+        SuperstepMetrics(r["superstep"], r["changes"], r["changes"] / nv, r["wall_ms"])
+        for r in res.records
+    ]
+    return LPResult(
+        labels=res.state, iterations=res.iterations, converged=res.converged, metrics=metrics
+    )

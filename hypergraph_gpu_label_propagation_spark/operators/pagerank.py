@@ -7,14 +7,12 @@ an incident hyperedge uniformly (1/degree), then a member uniformly
 (1/edge_size).  Dangling (degree-0) vertices redistribute their mass
 uniformly.  Scores sum to 1; convergence on L1 delta.
 
-Scale/iteration design (mirrors the LP driver loop):
+Scale/iteration design (the loop itself is plans/loop.py::fixed_point):
 - the state frame carries (vertex_id, rank, inv_degree) — inv_degree
   is joined ONCE at init and rides along, null marking dangling
   vertices, so no per-iteration degree join or anti-join;
-- exactly two Spark actions per iteration: the eager localCheckpoint
-  (which also truncates lineage — without it plan depth grows per
-  iteration and driver time explodes) and one combined aggregate that
-  returns BOTH the L1 delta and the next iteration's dangling mass;
+- one observe() per iteration returns BOTH the L1 delta and the next
+  iteration's dangling mass on the checkpoint job;
 - the two gathers hit the frozen incidence layouts; sum is algebraic so
   map-side partial aggregation absorbs hyperedge skew.
 """
@@ -23,11 +21,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
 
 
 @dataclass
@@ -126,20 +125,9 @@ def hypergraph_pagerank(
     is renormalized to sum 1 (the L1 contraction also tolerates an
     unnormalized start, but a probability vector keeps the delta-vs-tol
     semantics identical to a cold run's)."""
-    from hypergraph_gpu_label_propagation_spark.plans.checkpointing import (
-        find_latest_snapshot,
-        write_snapshot,
-    )
-
-    start = 0
-    state = None
-    if resume and checkpoint_dir:
-        found = find_latest_snapshot(hg.spark, checkpoint_dir, "pagerank")
-        if found is not None:
-            state, start = found
-            state = state.select("vertex_id", "rank", "inv_degree")
-    if state is None and initial_ranks is not None:
-        state = pagerank_state_init(hg).alias("s").join(
+    state = pagerank_state_init(hg)
+    if initial_ranks is not None:
+        state = state.alias("s").join(
             initial_ranks.select(
                 "vertex_id", F.col("rank").alias("_warm")
             ).alias("w"),
@@ -150,63 +138,59 @@ def hypergraph_pagerank(
             F.coalesce("_warm", F.col("s.rank")).alias("rank"),
             "inv_degree",
         )
-    if state is None:
-        state = pagerank_state_init(hg)
-    # the dangling-mass init rides the eager-localCheckpoint job via
-    # observe() — no separate driver collect (observed metrics fire on
-    # eager localCheckpoint, same mechanism as the loop body)
-    obs0 = Observation("pr_init")
-    state = state.observe(
-        obs0,
-        F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))).alias("dang"),
-        F.sum("rank").alias("total"),
-    ).localCheckpoint(eager=True)
-    row0 = obs0.get
-    dangling = float(row0["dang"] or 0.0)
-    total = float(row0["total"] or 1.0)
-    if abs(total - 1.0) > 1e-12:
-        # renormalize a warm start over a grown vertex set to a
-        # probability vector; lazy — materialized by iteration 1's
-        # checkpoint, no extra action (dangling scales with it)
-        state = state.withColumn("rank", F.col("rank") / F.lit(total))
-        dangling /= total
-    deltas: list[float] = []
-    converged = False
-    iterations = start
-    # loop-scoped tuning (plans/tuning.py): AQE off, data-sized partitions
+    # a resume reads the dangling mass from the snapshot's record; the
+    # rank total shows whether a warm start needs renormalizing
+    return _power_iterate(
+        hg, "pagerank", state, pagerank_step, damping, max_iterations, tol,
+        [_dangling_mass(), F.sum("rank").alias("total")], checkpoint_dir, resume,
+    )
+
+
+def _dangling_mass() -> Column:
+    return F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))).alias("dang")
+
+
+def _power_iterate(
+    hg: Hypergraph,
+    name: str,
+    state0: DataFrame,
+    step_fn,
+    damping: float,
+    max_iterations: int,
+    tol: float,
+    init_observe: list[Column],
+    checkpoint_dir: str | None = None,
+    resume: bool = False,
+) -> PageRankResult:
+    """The PageRank/PPR loop: ``step_fn(hg, state, dangling, damping)``
+    per iteration until the L1 delta drops below ``tol``."""
+
+    def step(state: DataFrame, row: dict) -> DataFrame:
+        dangling = float(row["dang"])
+        total = row.get("total", 1.0)
+        if abs(total - 1.0) > 1e-12:
+            # renormalize a warm start over a grown vertex set to a
+            # probability vector; lazy — materialized by iteration 1's
+            # checkpoint, no extra action (dangling scales with it)
+            state = state.withColumn("rank", F.col("rank") / F.lit(total))
+            dangling /= total
+        return step_fn(hg, state, dangling, damping)
+
     cores = hg.spark.sparkContext.defaultParallelism
-    with loop_conf(hg.spark, loop_partitions(hg.count_incidence(), cores)):
-        for it in range(start, max_iterations):
-            obs = Observation(f"pr_{it}")
-            new = (
-                pagerank_step(hg, state, dangling, damping)
-                .observe(
-                    obs,
-                    F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-                    F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))).alias("dang"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            row = obs.get
-            delta = float(row["delta"] or 0.0)
-            dangling = float(row["dang"] or 0.0)
-            state.unpersist()  # no-op for checkpoint frames; see LP loop note
-            state = new.drop("_old")
-            iterations = it + 1
-            deltas.append(delta)
-            if checkpoint_dir:
-                write_snapshot(
-                    state, checkpoint_dir, "pagerank", iterations,
-                    {"op": "pagerank", "superstep": iterations, "l1_delta": delta},
-                )
-            if delta < tol:
-                converged = True
-                break
+    res = fixed_point(
+        name, state0, step,
+        [F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"), _dangling_mass()],
+        # the init row carries no delta
+        lambda row: "delta" in row and row["delta"] < tol,
+        partitions=loop_partitions(hg.count_incidence(), cores),
+        max_iterations=max_iterations, init_observe=init_observe,
+        checkpoint_dir=checkpoint_dir, resume=resume,
+    )
     return PageRankResult(
-        ranks=state.select("vertex_id", "rank"),
-        iterations=iterations,
-        converged=converged,
-        deltas=deltas,
+        ranks=res.state.select("vertex_id", "rank"),
+        iterations=res.iterations,
+        converged=res.converged,
+        deltas=[float(r["delta"]) for r in res.records],
     )
 
 
@@ -292,48 +276,8 @@ def personalized_pagerank(
     max_iterations: int = 100,
     tol: float = 1e-9,
 ) -> PageRankResult:
-    """PPR to L1 delta < tol (same loop discipline as
-    hypergraph_pagerank: one observe()-fused action per iteration,
-    localCheckpoint lineage truncation, loop-scoped conf)."""
-    obs0 = Observation("ppr_init")
-    state = (
-        ppr_state_init(hg, seeds)
-        .observe(
-            obs0,
-            F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))).alias("dang"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    dangling = float(obs0.get["dang"] or 0.0)
-    deltas: list[float] = []
-    converged = False
-    iterations = 0
-    cores = hg.spark.sparkContext.defaultParallelism
-    with loop_conf(hg.spark, loop_partitions(hg.count_incidence(), cores)):
-        for it in range(max_iterations):
-            obs = Observation(f"ppr_{it}")
-            new = (
-                ppr_step(hg, state, dangling, damping)
-                .observe(
-                    obs,
-                    F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-                    F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))).alias("dang"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            row = obs.get
-            delta = float(row["delta"] or 0.0)
-            dangling = float(row["dang"] or 0.0)
-            state.unpersist()  # no-op for checkpoint frames; see LP loop note
-            state = new.drop("_old")
-            iterations = it + 1
-            deltas.append(delta)
-            if delta < tol:
-                converged = True
-                break
-    return PageRankResult(
-        ranks=state.select("vertex_id", "rank"),
-        iterations=iterations,
-        converged=converged,
-        deltas=deltas,
+    """PPR to L1 delta < tol (same loop as hypergraph_pagerank)."""
+    return _power_iterate(
+        hg, "ppr", ppr_state_init(hg, seeds), ppr_step, damping, max_iterations, tol,
+        [_dangling_mass()],
     )

@@ -145,7 +145,8 @@ def triangle_count(
     fixed session default going 7.5x spill-slow at 10x data).
     """
     # persist()+count(), not eager localCheckpoint: the round-4 A/B
-    # (tools/ab_triangles.py, 4 alternating reps at sf0.1, min/median)
+    # (BENCH_SCALING.md "triangle_count materialization A/B", 4
+    # alternating reps at sf0.1, min/median)
     # measured A=localCheckpoint 5.68/9.04s, B=persist+count 5.53/5.70s,
     # C=none 9.04/9.65s — persist wins and is far more noise-robust.
     # The 1-row result is materialized eagerly (inside the partition

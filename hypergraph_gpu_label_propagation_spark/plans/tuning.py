@@ -1,24 +1,10 @@
 """Runtime conf scoping for the iterative driver loops.
 
-Measured on this host (sf0.1 hypergraph, 600k incidence rows, local[32],
-2 reps): AQE's per-exchange stage-materialization barriers dominate the
-superstep at small-to-medium data —
-
-    baseline sp=32 aqe=on : median superstep 1.85 s
-    aqe=off  sp=32        : 2.85 s
-    aqe=on   sp=8         : 1.93 s
-    aqe=off  sp=8         : 1.05 s   <- 1.8x better than default
-
-AQE exists to re-plan unknown data; inside an LP/PageRank/CC loop the
-per-superstep frames have KNOWN, stable shapes (one row per vertex/edge,
-bounded-size majority partials), so adaptive re-planning buys nothing
-and costs a barrier per exchange.  Skew is already absorbed before the
-shuffle by the algebraic partial aggregation (operators/majority.py), so
-AQE's skew-join splitting is not load-bearing here either.
-
-``loop_conf`` scopes the tuned values to the loop and restores the
-session's settings afterwards, so one-shot relational queries keep the
-AQE default (where it IS load-bearing).
+``loop_partitions`` sizes a loop's shuffle partitions to its data;
+``loop_conf`` scopes them, with AQE off by default, to the loop and
+restores the session's settings afterwards, so one-shot relational
+queries keep the AQE default (where it IS load-bearing).  Why AQE is
+off inside a loop, with its measurement: plans/loop.py.
 """
 
 from __future__ import annotations

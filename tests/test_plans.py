@@ -146,6 +146,10 @@ def test_iterative_state_stats_stay_linear(spark):
     from hypergraph_gpu_label_propagation_spark.operators.label_propagation import (
         label_propagation,
     )
+    from hypergraph_gpu_label_propagation_spark.operators.pagerank import (
+        hypergraph_pagerank,
+        personalized_pagerank,
+    )
     from hypergraph_gpu_label_propagation_spark.plans.inspect import (
         assert_linear_state_refs,
         stats_size_bits,
@@ -182,6 +186,15 @@ def test_iterative_state_stats_stay_linear(spark):
         r = coreness(hg, max_iterations=n, init_cap=False, fused_steps=1)
         return r.coreness, r.iterations
 
+    # tol=0.0: the L1 delta never drops below it, so each run does n rounds
+    def pr(n):
+        r = hypergraph_pagerank(hg, max_iterations=n, tol=0.0)
+        return r.ranks, r.iterations
+
+    def ppr(n):
+        r = personalized_pagerank(hg, [0], max_iterations=n, tol=0.0)
+        return r.ranks, r.iterations
+
     def truss(n):
         r = k_truss(hg_t, k=4, max_iterations=n)
         return r.membership, r.iterations
@@ -190,6 +203,8 @@ def test_iterative_state_stats_stay_linear(spark):
         ("lp", lp, 2, 6),
         ("cc", cc, 2, 6),
         ("coreness", core, 2, 6),
+        ("pagerank", pr, 2, 6),
+        ("ppr", ppr, 2, 6),
         # seed-11 graph peels in exactly 3 dropping rounds at k=4
         ("ktruss", truss, 1, 3),
     ):
