@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from hypergraph_gpu_label_propagation_spark.plans.tuning import fits_broadcast, unsafe_row_bytes
+
 INCIDENCE_SCHEMA = "edge_id long, vertex_id long"
 LABELS_SCHEMA = "vertex_id long, label int"
 
@@ -256,29 +258,6 @@ class Hypergraph:
 
     # -- superstep joins (salt-aware) ----------------------------------
 
-    # Broadcast-gather threshold (r08): rows of a one-row-per-id frame
-    # below which the gather joins broadcast the frame against the
-    # layout partitioned by the OUTPUT key, making the downstream
-    # per-key aggregation exchange-free (guide §2.4/§3.1: a broadcast
-    # join replaces the shuffle of the large side; keying the streamed
-    # side by the aggregation key removes the post-join exchange too).
-    # 4M rows ≈ 64 MB framed — comfortably inside this session's 16 g
-    # driver and the 8 GB broadcast cap; at 100 TB (billions of ids)
-    # the check fails and the co-partitioned shuffle path below runs
-    # unchanged.  Conf-overridable for cluster tuning.
-    GATHER_BROADCAST_MAX_ROWS = 4_000_000
-
-    def _gather_broadcast_rows(self) -> int:
-        try:
-            return int(
-                self.spark.conf.get(
-                    "spark.graft.gather.broadcast.maxRows",
-                    str(self.GATHER_BROADCAST_MAX_ROWS),
-                )
-            )
-        except Exception:  # noqa: BLE001 — conservative: keep default
-            return self.GATHER_BROADCAST_MAX_ROWS
-
     def gather_to_edge(self, frame: DataFrame) -> DataFrame:
         """incidence ⋈ a one-row-per-vertex frame, planned so a
         downstream groupBy("edge_id", ...) needs NO exchange: when the
@@ -286,10 +265,12 @@ class Hypergraph:
         broadcast against the EDGE-partitioned layout (the broadcast
         hash join preserves the streamed side's hashpartitioning
         (edge_id), which satisfies any ClusteredDistribution containing
-        edge_id).  Falls back to the co-partitioned vertex-side join
-        (one post-join E-sized exchange) when the frame is too big or a
-        salted layout is in force."""
-        if self.salt == 1 and self.num_vertices <= self._gather_broadcast_rows():
+        edge_id; r08).  Falls back to the co-partitioned vertex-side
+        join (one post-join E-sized exchange) when the frame fails
+        plans/tuning.py::fits_broadcast or a salted layout is in force."""
+        if self.salt == 1 and fits_broadcast(
+            self.spark, self.num_vertices, unsafe_row_bytes(len(frame.columns))
+        ):
             return self.incidence_by_edge.join(F.broadcast(frame), "vertex_id")
         return self.join_by_vertex(frame)
 
@@ -297,7 +278,9 @@ class Hypergraph:
         """incidence ⋈ a one-row-per-edge frame, planned so a downstream
         groupBy("vertex_id", ...) needs NO exchange (mirror of
         :meth:`gather_to_edge`)."""
-        if self.salt == 1 and self.num_edges <= self._gather_broadcast_rows():
+        if self.salt == 1 and fits_broadcast(
+            self.spark, self.num_edges, unsafe_row_bytes(len(frame.columns))
+        ):
             return self.incidence_by_vertex.join(F.broadcast(frame), "edge_id")
         return self.join_by_edge(frame)
 

@@ -40,7 +40,11 @@ from pyspark.storagelevel import StorageLevel
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
 from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
+from hypergraph_gpu_label_propagation_spark.plans.tuning import (
+    fits_broadcast,
+    loop_partitions,
+    unsafe_row_bytes,
+)
 
 
 @dataclass
@@ -61,31 +65,25 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     # symmetric adjacency (both directions) so degree = neighbor count.
-    # r08: partitioned by the aggregation key and persist()ed (not
-    # localCheckpoint — a checkpoint scan loses outputPartitioning) so
-    # that, with the vertex-sized alive set BROADCAST, each round's
-    # degree groupBy aggregates in place — zero E-sized exchanges per
-    # peel round; over the broadcast threshold the r07 shuffle shape
-    # runs unchanged (same rule as coreness).
+    # r08: while the vertex-sized alive set passes fits_broadcast it is
+    # BROADCAST and the adjacency is partitioned by the aggregation key
+    # and persist()ed (a checkpoint scan loses outputPartitioning), so
+    # each round's degree groupBy aggregates in place — zero E-sized
+    # exchanges per peel round; otherwise the r07 shuffle shape runs.
     half = clique_expansion(hg) if adj is None else adj
-    cores = hg.spark.sparkContext.defaultParallelism
-    n_part = loop_partitions(hg.count_incidence(), cores)
-    use_bcast = hg.num_vertices <= hg._gather_broadcast_rows()
-    if use_bcast:
-        n_part = max(n_part, cores)
     sym = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    adj = (
-        sym.repartition(n_part, "u").persist(StorageLevel.MEMORY_AND_DISK)
-        if use_bcast
-        else sym.localCheckpoint(eager=True)
-    )
+    cores = hg.spark.sparkContext.defaultParallelism
+    n_part = loop_partitions(hg.count_incidence(), cores)
+    use_bcast = fits_broadcast(hg.spark, hg.num_vertices, unsafe_row_bytes(1))
     if use_bcast:
+        n_part = max(n_part, cores)
+        adj = sym.repartition(n_part, "u").persist(StorageLevel.MEMORY_AND_DISK)
         adj.count()
-
-    def _alive_join(frame):
-        return F.broadcast(frame) if use_bcast else frame
+    else:
+        adj = sym.localCheckpoint(eager=True)
+    _alive_join = F.broadcast if use_bcast else (lambda df: df)
 
     def peel(alive: DataFrame, _) -> DataFrame:
         deg = (
@@ -139,44 +137,45 @@ class CorenessResult:
 def coreness_adjacency(
     hg: Hypergraph, half: DataFrame
 ) -> tuple[DataFrame, int, int, bool]:
-    """Symmetrized adjacency of the clique expansion ``half`` (distinct
-    u < v pairs), cached on the key the sweep needs.
+    """Symmetrized adjacency of the materialized clique expansion
+    ``half`` (distinct u < v pairs), cached on the key the sweep needs.
 
     Returns ``(adj, n_part, n_pairs, use_bcast)``.  Broadcast/shuffle
-    rule (r08): the per-sweep values frame is vertex-sized, so while
-    ``num_vertices`` fits ``hg._gather_broadcast_rows()`` the adjacency
-    is partitioned by the AGGREGATION key ``u`` and the values are
+    rule (r08): while the vertex-sized per-sweep values frame ``(v,
+    c)`` passes plans/tuning.py::fits_broadcast, the adjacency is
+    partitioned by the AGGREGATION key ``u`` and the values are
     broadcast on ``v`` — every sweep's groupBy(u) runs in place, zero
     E-sized exchanges per sweep, and the partition count (the sweep's
-    parallelism) is floored at the core count.  Above the threshold it
-    is partitioned by the JOIN key ``v`` and only the values frame
+    parallelism) is floored at the core count.  Otherwise it is
+    partitioned by the JOIN key ``v`` and only the values frame
     exchanges (shuffle_hash probes the adjacency in place).
 
-    ``n_part`` is sized from the expansion row count, not the incidence
+    ``n_pairs`` is exactly twice ``half``'s row count (its pairs are
+    distinct with u < v), so the symmetric frame is built once, by the
+    persist below.  ``n_part`` is sized from it, not the incidence
     (the expansion is 4x the incidence at sf1; incidence sizing left
-    spill-bound rounds, BENCH_SCALING.md round 5).  Ids are narrowed to
-    int when they fit (half the cached bytes; exact by the bound check).
-    persist(), not localCheckpoint: a checkpoint scan reports unknown
-    outputPartitioning, so the sweep would re-exchange it anyway.
+    spill-bound rounds, BENCH_SCALING.md round 5).  Ids are narrowed
+    to int when they fit (half the cached bytes; exact by the bound
+    check).  persist(), not localCheckpoint: a checkpoint scan reports
+    unknown outputPartitioning, so the sweep would re-exchange it.
     """
     cores = hg.spark.sparkContext.defaultParallelism
+    n_pairs = 2 * half.count()
+    n_part = loop_partitions(n_pairs, cores)
     sym = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    n_pairs = sym.count()
-    n_part = loop_partitions(n_pairs, cores)
+    )
     if 0 < hg.num_vertices < 2**31:
         sym = sym.select(
             F.col("u").cast("int").alias("u"), F.col("v").cast("int").alias("v")
         )
-    use_bcast = hg.num_vertices <= hg._gather_broadcast_rows()
+    use_bcast = fits_broadcast(hg.spark, hg.num_vertices, unsafe_row_bytes(2))
     if use_bcast:
         n_part = max(n_part, cores)
     adj = sym.repartition(n_part, "u" if use_bcast else "v").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     adj.count()
-    sym.unpersist()
     return adj, n_part, n_pairs, use_bcast
 
 
@@ -269,7 +268,7 @@ def coreness(
     """
     if fused_steps < 1:
         raise ValueError("fused_steps must be >= 1")
-    half = clique_expansion(hg) if adj is None else adj
+    half = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
     adj, n_part, n_pairs, use_bcast = coreness_adjacency(hg, half)
 
     # int state: c <= max expansion degree < 2^31; counts over

@@ -369,7 +369,7 @@ def _probe_topk(
 # corpus assignment pass) amortizes across every later query batch.
 # ---------------------------------------------------------------------------
 
-# Crossover (measured, tools/ab_ivf_index.py, BENCH_SCALING.md round 7):
+# Crossover (measured, BENCH_SCALING.md "Round 7: durable IVF index"):
 # the durable index pays one corpus assignment pass + two table writes
 # up front and saves the k-means fit + assignment on EVERY later batch.
 # Warm probes beat inline ivf_topk from the second batch on — so the

@@ -56,12 +56,13 @@ from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-    _triangles_broadcast_rows,
+    PAIR_ROW_BYTES,
     _wedge_partitions,
     clique_expansion,
     packed_pair_key,
 )
 from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import fits_broadcast
 
 
 @dataclass
@@ -121,10 +122,10 @@ def k_truss(
     # doc); the init observation pre-counts next round's removals so
     # the strategy choice is action-free.
     # r08 (guide §2.4): broadcast the pair set in the seeding pass
-    # when it fits (triangles.TRIANGLES_BROADCAST_MAX_ROWS) — the
-    # wedge intermediate is then never exchanged; over the
-    # threshold the r06 shuffle shape runs unchanged
-    _use_bcast0 = n_pairs <= _triangles_broadcast_rows(hg.spark)
+    # when it passes fits_broadcast (as triangles._oriented_triangles)
+    # — the wedge intermediate is then never exchanged; otherwise the
+    # r06 shuffle shape runs unchanged
+    _use_bcast0 = fits_broadcast(hg.spark, n_pairs, PAIR_ROW_BYTES)
     _maybe_bcast = F.broadcast if _use_bcast0 else (lambda df: df)
     wedges0 = base.join(
         _maybe_bcast(base.select(F.col("u").alias("v"), F.col("v").alias("w"))),

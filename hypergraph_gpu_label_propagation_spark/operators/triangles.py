@@ -28,7 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf
+from hypergraph_gpu_label_propagation_spark.plans.tuning import (
+    fits_broadcast,
+    loop_conf,
+    unsafe_row_bytes,
+)
 
 # target adjacency PAIRS per shuffle partition for the wedge join: the
 # wedge intermediate (sum of C(out-degree, 2)) inflates well past the
@@ -39,29 +43,7 @@ from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf
 # formula leaves sf0.1 (1.2M pairs) at its measured-best 32.
 PAIRS_PER_PARTITION = 100_000
 
-# r08 broadcast wedge pass (guide §2.4/§3.1): below this adjacency row
-# count, both triangle joins broadcast the (u,v) pair set — the wedge
-# intermediate (tens of millions of rows, the dominant exchange of the
-# old plan) is then never shuffled at all; the whole count runs as one
-# scan stage over the adjacency partitions.  16M pairs ≈ 256 MB raw /
-# under 1 GB as a hashed relation — fine for this session's 16 GiB
-# driver (local mode holds ONE copy); on a memory-tight cluster lower
-# `spark.graft.triangles.broadcast.maxRows`.  Above the threshold the
-# measured r05 shuffle shape (wedge-partitioned sort-merge + semi)
-# runs unchanged.
-TRIANGLES_BROADCAST_MAX_ROWS = 16_000_000
-
-
-def _triangles_broadcast_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(
-                "spark.graft.triangles.broadcast.maxRows",
-                str(TRIANGLES_BROADCAST_MAX_ROWS),
-            )
-        )
-    except Exception:  # noqa: BLE001 — conservative: keep default
-        return TRIANGLES_BROADCAST_MAX_ROWS
+PAIR_ROW_BYTES = unsafe_row_bytes(2)  # one (v, w) or (u, w) build row
 
 
 def packed_pair_key(hi: str, lo: str):
@@ -75,19 +57,19 @@ def packed_pair_key(hi: str, lo: str):
 def _oriented_triangles(
     adj: DataFrame, n_pairs: int, max_id: int | None = None
 ) -> DataFrame:
-    """(u, v, w) oriented triangle rows (u < v < w, each triangle once)
-    — broadcast wedge shape when the pair set fits (see
-    TRIANGLES_BROADCAST_MAX_ROWS), else the shuffle wedge join.
+    """(u, v, w) oriented triangle rows (u < v < w, each triangle once).
+    While the pair set passes fits_broadcast both joins broadcast it
+    (r08), so the wedge intermediate is never shuffled; else the r05
+    shuffle shape (wedge-partitioned sort-merge + semi).
 
     ``max_id``: exclusive upper bound on vertex ids when the caller
     knows it (hg.num_vertices); below 2^31 the closing-edge key is
     packed into one long so the broadcast relation is a
     LongHashedRelation (cheaper build + probe) instead of a
     composite-key map."""
-    spark = adj.sparkSession
     right = adj.select(F.col("u").alias("v"), F.col("v").alias("w"))
     closing = adj.select(F.col("u"), F.col("v").alias("w"))
-    if n_pairs <= _triangles_broadcast_rows(spark):
+    if fits_broadcast(adj.sparkSession, n_pairs, PAIR_ROW_BYTES):
         wedges = adj.join(F.broadcast(right), "v")
         if max_id is not None and 0 < max_id < 2**31:
             closing_packed = adj.select(packed_pair_key("u", "v").alias("_uw"))

@@ -1,10 +1,12 @@
-"""Runtime conf scoping for the iterative driver loops.
+"""Runtime sizing rules shared by the operators.
 
 ``loop_partitions`` sizes a loop's shuffle partitions to its data;
 ``loop_conf`` scopes them, with AQE off by default, to the loop and
 restores the session's settings afterwards, so one-shot relational
 queries keep the AQE default (where it IS load-bearing).  Why AQE is
 off inside a loop, with its measurement: plans/loop.py.
+``fits_broadcast`` is the one broadcast-or-shuffle rule every
+size-gated ``F.broadcast`` goes through.
 """
 
 from __future__ import annotations
@@ -56,3 +58,34 @@ def loop_conf(spark: SparkSession, partitions: int, adaptive: bool = False):
     finally:
         conf.set("spark.sql.shuffle.partitions", old_sp)
         conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def unsafe_row_bytes(columns: int) -> int:
+    """UnsafeRow size of a row of fixed-width columns: an 8-byte null
+    word plus 8 bytes per column."""
+    return 8 * (1 + columns)
+
+
+def fits_broadcast(spark: SparkSession, rows: int, row_bytes: int) -> bool:
+    """May a build side of ``rows`` rows of ``row_bytes`` bytes each
+    (unsafe_row_bytes) be broadcast?  False sends the caller to its
+    shuffle fallback.
+
+    ``spark.sql.autoBroadcastJoinThreshold`` <= 0 is Spark's "no
+    broadcast joins" switch: False at any size, so one conf forces
+    every fallback.  Otherwise the bytes must stay under Spark's 8 GiB
+    cap (BroadcastExchangeExec refuses more) and under driver heap /
+    32.  The relation is built on the driver, which then holds the
+    collected rows (1x), the hashed relation (~3x: the rows plus key,
+    length and next-pointer words and two slot longs per key at load
+    <= 0.5) and TorrentBroadcast's serialized pieces (~3x): ~8x.  A
+    plan builds up to two at once (LP's two gathers, the triangle
+    pass's two views of the pair set), 16x, and half the heap stays
+    with cached layouts and running tasks: 32x.  Local mode holds each
+    relation once; on a cluster each executor holds one more (~3x).
+    Row bounds: BENCH_SCALING.md "One broadcast rule".
+    """
+    if spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() <= 0:
+        return False
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    return rows * row_bytes < min(8 << 30, heap // 32)

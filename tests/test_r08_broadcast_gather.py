@@ -3,8 +3,9 @@ every iterative operator, the freeze scalar counts, and the
 bucketed-manifest counts + kind guard.
 
 The broadcast path is a PLAN choice, never a semantics choice — these
-tests flip `spark.graft.gather.broadcast.maxRows` / the triangles
-threshold and assert identical results.
+tests turn broadcast joins off with `spark.sql.autoBroadcastJoinThreshold`
+(the one switch plans/tuning.py::fits_broadcast obeys) and assert
+identical results.
 """
 
 from __future__ import annotations
@@ -25,8 +26,9 @@ def hgx(spark):
     hg.unpersist()
 
 
-def _with_gather_rows(spark, rows):
-    spark.conf.set("spark.graft.gather.broadcast.maxRows", str(rows))
+def _with_broadcast(spark, on):
+    threshold = str(64 * 1024 * 1024) if on else "-1"
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_lp_superstep_broadcast_equals_shuffle(spark, hgx):
@@ -38,12 +40,12 @@ def test_lp_superstep_broadcast_equals_shuffle(spark, hgx):
         F.col("id").alias("vertex_id"), (F.col("id") % 7).cast("int").alias("label")
     )
     try:
-        _with_gather_rows(spark, 4_000_000)
+        _with_broadcast(spark, True)
         a = sorted(map(tuple, lp_superstep(hgx, labels, 7).collect()))
-        _with_gather_rows(spark, 0)
+        _with_broadcast(spark, False)
         b = sorted(map(tuple, lp_superstep(hgx, labels, 7).collect()))
     finally:
-        spark.conf.unset("spark.graft.gather.broadcast.maxRows")
+        _with_broadcast(spark, True)
     assert a == b
 
 
@@ -56,20 +58,20 @@ def test_cc_and_pagerank_broadcast_equals_shuffle(spark, hgx):
     )
 
     try:
-        _with_gather_rows(spark, 4_000_000)
+        _with_broadcast(spark, True)
         cc_a = sorted(map(tuple, connected_components(hgx).components.collect()))
         pr_a = {
             r["vertex_id"]: round(r["rank"], 9)
             for r in hypergraph_pagerank(hgx, tol=1e-9).ranks.collect()
         }
-        _with_gather_rows(spark, 0)
+        _with_broadcast(spark, False)
         cc_b = sorted(map(tuple, connected_components(hgx).components.collect()))
         pr_b = {
             r["vertex_id"]: round(r["rank"], 9)
             for r in hypergraph_pagerank(hgx, tol=1e-9).ranks.collect()
         }
     finally:
-        spark.conf.unset("spark.graft.gather.broadcast.maxRows")
+        _with_broadcast(spark, True)
     assert cc_a == cc_b
     assert set(pr_a) == set(pr_b)
     for k in pr_a:
@@ -80,12 +82,12 @@ def test_coreness_broadcast_equals_shuffle(spark, hgx):
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
 
     try:
-        _with_gather_rows(spark, 4_000_000)
+        _with_broadcast(spark, True)
         bcast = sorted(map(tuple, coreness(hgx).coreness.collect()))
-        _with_gather_rows(spark, 0)
+        _with_broadcast(spark, False)
         shuf = sorted(map(tuple, coreness(hgx).coreness.collect()))
     finally:
-        spark.conf.unset("spark.graft.gather.broadcast.maxRows")
+        _with_broadcast(spark, True)
     assert bcast == shuf
 
 
@@ -96,14 +98,14 @@ def test_triangles_broadcast_equals_shuffle(spark, hgx):
     )
 
     try:
-        spark.conf.set("spark.graft.triangles.broadcast.maxRows", "16000000")
+        _with_broadcast(spark, True)
         n_a = triangle_count(hgx).collect()[0][0]
         pv_a = sorted(map(tuple, per_vertex_triangle_count(hgx).collect()))
-        spark.conf.set("spark.graft.triangles.broadcast.maxRows", "0")
+        _with_broadcast(spark, False)
         n_b = triangle_count(hgx).collect()[0][0]
         pv_b = sorted(map(tuple, per_vertex_triangle_count(hgx).collect()))
     finally:
-        spark.conf.unset("spark.graft.triangles.broadcast.maxRows")
+        _with_broadcast(spark, True)
     assert n_a == n_b
     assert pv_a == pv_b
 

@@ -43,7 +43,9 @@ def main() -> None:
 
     # LP_SCALE_SALT: freeze-time skew salt (default 1 = off).
     # LP_SCALE_NO_BROADCAST: disable broadcast joins — the 10^12-file
-    # proxy regime where no label frame fits in a broadcast.
+    # proxy regime where no label frame fits in a broadcast; the gathers
+    # obey the switch (plans/tuning.py::fits_broadcast), so it runs the
+    # shuffle gather.
     salt = int(_os.environ.get("LP_SCALE_SALT", "1"))
     no_bcast = _os.environ.get("LP_SCALE_NO_BROADCAST", "") == "1"
     spark = get_spark(

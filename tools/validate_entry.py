@@ -9,7 +9,9 @@ Usage: python tools/validate_entry.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, "/root/repo")
@@ -23,6 +25,35 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+GIB = 1 << 30
+UNITS = {"k": 1 << 10, "m": 1 << 20, "g": GIB, "t": 1 << 40}
+
+
+def split_memory() -> tuple[int, int]:
+    """(JVM heap, DuckDB memory_limit) in bytes for this host.
+
+    The Spark driver JVM and the in-process DuckDB oracle share the
+    host's physical RAM.  DuckDB's default limit is 80% of RAM, which
+    on top of a JVM heap overcommits it (the sf0.01 ktruss oracle was
+    OOM-killed that way on a 15 GB host).  The JVM takes
+    SPARK_DRIVER_MEMORY, or half of RAM when it is unset (session.py's
+    16g default exceeds a 15 GB host; the sf0.01 Spark side needs a
+    few GB).  Next to its heap the JVM keeps ~1 GiB off-heap
+    (metaspace, code cache, thread stacks, netty buffers).  This
+    Python process holds ~3 GiB beyond DuckDB's limit: the limit
+    bounds DuckDB's buffer pool only, and at sf0.01 the process peaked
+    2.1 GiB above a 6.7 GiB limit (collected result rows, fetched
+    oracle rows, allocations outside the pool).  DuckDB gets the rest,
+    RAM - heap - 4 GiB, at least 1 GiB, and spills past it to its
+    temp_directory.
+    """
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    spec = os.environ.get("SPARK_DRIVER_MEMORY", f"{ram // 2 // GIB}g").lower()
+    # a bare number is MiB, as Spark reads spark.driver.memory
+    heap = int(spec[:-1]) * UNITS[spec[-1]] if spec[-1] in UNITS else int(spec) << 20
+    return heap, max(GIB, ram - heap - 4 * GIB)
 
 
 def norm_cell(v):
@@ -51,8 +82,15 @@ def main():
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = [a for a in args if "/" not in a]
 
+    heap, duck_bytes = split_memory()
+    os.environ["SPARK_DRIVER_MEMORY"] = f"{heap >> 20}m"
     spark = get_spark("validate_entry")
-    con = duckdb.connect()
+    local_dir = os.environ.get("SPARK_LOCAL_DIRS", tempfile.gettempdir()).split(",")[0]
+    con = duckdb.connect(config={
+        "memory_limit": f"{duck_bytes // (1 << 20)}MB",
+        "temp_directory": os.path.join(local_dir, "validate_entry_duckdb"),
+    })
+    print(f"memory: JVM heap {heap / GIB:.1f} GiB, DuckDB limit {duck_bytes / GIB:.1f} GiB")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
