@@ -478,7 +478,9 @@ def q_ktruss(spark, sf_dir):
 
 def q_triangle_count(spark, sf_dir):
     hg = _freeze(spark, sf_dir)
-    return triangle_count(hg).select(F.col("n_triangles").cast("long").alias("n_triangles"))
+    out = triangle_count(hg)  # one row, materialized: safe to release hg
+    hg.unpersist()
+    return out.select(F.col("n_triangles").cast("long").alias("n_triangles"))
 
 
 def q_triangles_per_vertex(spark, sf_dir):
@@ -487,9 +489,9 @@ def q_triangles_per_vertex(spark, sf_dir):
     )
 
     hg = _freeze(spark, sf_dir)
-    return per_vertex_triangle_count(hg).select(
-        "vertex_id", F.col("n_triangles").cast("long").alias("n_triangles")
-    )
+    out = per_vertex_triangle_count(hg)  # vertex-sized, materialized
+    hg.unpersist()
+    return out.select("vertex_id", F.col("n_triangles").cast("long").alias("n_triangles"))
 
 
 def q_near_dup(spark, sf_dir):

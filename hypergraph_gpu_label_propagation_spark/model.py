@@ -76,6 +76,7 @@ class Hypergraph:
     salted_by_vertex: DataFrame | None = None
     salted_by_edge: DataFrame | None = None
     _persisted: list[DataFrame] = field(default_factory=list)
+    _cooccurrence: tuple | None = None  # (source, layout): triangles.cooccurrence
 
     def count_incidence(self) -> int:
         """Total incidence rows (memoized; one cheap job on the cached
@@ -334,3 +335,6 @@ class Hypergraph:
         for df in self._persisted:
             df.unpersist()
         self._persisted = []
+        if self._cooccurrence is not None:
+            self._cooccurrence[1].sym.unpersist()
+            self._cooccurrence = None

@@ -19,7 +19,8 @@ thousands on heavy-tailed graphs).
 
 :func:`k_core` execution shape (both loops run on plans/loop.py::
 fixed_point):
-- adjacency built once;
+- both read the shared co-occurrence layout's symmetric adjacency
+  (operators/triangles.py::cooccurrence), partitioned by u;
 - per round: one degree aggregation over alive edges + one semi-join —
   both algebraic/narrow, skew absorbed by partial aggregation;
 - O(rounds) = O(peeling depth), each round strictly shrinks or stops.
@@ -38,13 +39,12 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
-from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
-from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
-from hypergraph_gpu_label_propagation_spark.plans.tuning import (
-    fits_broadcast,
-    loop_partitions,
-    unsafe_row_bytes,
+from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+    Cooccurrence,
+    cooccurrence,
 )
+from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
+from hypergraph_gpu_label_propagation_spark.plans.tuning import fits_broadcast, unsafe_row_bytes
 
 
 @dataclass
@@ -61,28 +61,17 @@ def k_core(
     max_iterations: int = 200,
     adj: DataFrame | None = None,
 ) -> KCoreResult:
-    """Vertices of the k-core of the co-occurrence graph."""
+    """Vertices of the k-core of the co-occurrence graph.  ``adj``: as
+    in :func:`coreness`."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    # symmetric adjacency (both directions) so degree = neighbor count.
-    # r08: while the vertex-sized alive set passes fits_broadcast it is
-    # BROADCAST and the adjacency is partitioned by the aggregation key
-    # and persist()ed (a checkpoint scan loses outputPartitioning), so
-    # each round's degree groupBy aggregates in place — zero E-sized
-    # exchanges per peel round; otherwise the r07 shuffle shape runs.
-    half = clique_expansion(hg) if adj is None else adj
-    sym = half.unionByName(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    cores = hg.spark.sparkContext.defaultParallelism
-    n_part = loop_partitions(hg.count_incidence(), cores)
+    # symmetric, so degree = neighbor count.  r08: while the alive set
+    # passes fits_broadcast it is BROADCAST and the u-partitioned
+    # adjacency aggregates each round's degree in place (zero E-sized
+    # exchanges per peel round); otherwise the r07 shuffle shape runs.
+    lay = cooccurrence(hg, adj)
+    adj = lay.sym
     use_bcast = fits_broadcast(hg.spark, hg.num_vertices, unsafe_row_bytes(1))
-    if use_bcast:
-        n_part = max(n_part, cores)
-        adj = sym.repartition(n_part, "u").persist(StorageLevel.MEMORY_AND_DISK)
-        adj.count()
-    else:
-        adj = sym.localCheckpoint(eager=True)
     _alive_join = F.broadcast if use_bcast else (lambda df: df)
 
     def peel(alive: DataFrame, _) -> DataFrame:
@@ -101,7 +90,8 @@ def k_core(
         # stable or empty; the init row has no removal, so a run peels
         # at least one round
         lambda row: "removed" in row and (row["removed"] == 0 or row["alive"] == 0),
-        partitions=n_part, max_iterations=max_iterations, init_observe=[n.alias("alive")],
+        partitions=lay.partitions, max_iterations=max_iterations,
+        init_observe=[n.alias("alive")],
     )
     membership = (
         hg.vertices()
@@ -109,8 +99,6 @@ def k_core(
               "vertex_id", "left")
         .select("vertex_id", F.coalesce("_in", F.lit(0)).cast("int").alias("in_core"))
     )
-    if use_bcast:
-        adj.unpersist()  # loop-local cache; alive is checkpointed
     return KCoreResult(
         membership=membership,
         iterations=res.iterations,
@@ -133,50 +121,22 @@ class CorenessResult:
     changes_per_iter: list[int] = field(default_factory=list)
 
 
+def coreness_adjacency(hg: Hypergraph, lay: Cooccurrence) -> tuple[DataFrame, bool]:
+    """The sweep's adjacency, read off the co-occurrence layout.
 
-def coreness_adjacency(
-    hg: Hypergraph, half: DataFrame
-) -> tuple[DataFrame, int, int, bool]:
-    """Symmetrized adjacency of the materialized clique expansion
-    ``half`` (distinct u < v pairs), cached on the key the sweep needs.
-
-    Returns ``(adj, n_part, n_pairs, use_bcast)``.  Broadcast/shuffle
-    rule (r08): while the vertex-sized per-sweep values frame ``(v,
-    c)`` passes plans/tuning.py::fits_broadcast, the adjacency is
-    partitioned by the AGGREGATION key ``u`` and the values are
+    Returns ``(adj, use_bcast)``.  Broadcast/shuffle rule (r08): while
+    the vertex-sized per-sweep values frame ``(v, c)`` passes
+    plans/tuning.py::fits_broadcast, ``adj`` is the layout's ``sym``,
+    partitioned by the AGGREGATION key ``u``, and the values are
     broadcast on ``v`` — every sweep's groupBy(u) runs in place, zero
-    E-sized exchanges per sweep, and the partition count (the sweep's
-    parallelism) is floored at the core count.  Otherwise it is
-    partitioned by the JOIN key ``v`` and only the values frame
-    exchanges (shuffle_hash probes the adjacency in place).
-
-    ``n_pairs`` is exactly twice ``half``'s row count (its pairs are
-    distinct with u < v), so the symmetric frame is built once, by the
-    persist below.  ``n_part`` is sized from it, not the incidence
-    (the expansion is 4x the incidence at sf1; incidence sizing left
-    spill-bound rounds, BENCH_SCALING.md round 5).  Ids are narrowed
-    to int when they fit (half the cached bytes; exact by the bound
-    check).  persist(), not localCheckpoint: a checkpoint scan reports
-    unknown outputPartitioning, so the sweep would re-exchange it.
+    E-sized exchanges per sweep.  Otherwise (the scale fallback) it is
+    a copy of ``sym`` partitioned by the JOIN key ``v`` and persisted,
+    which the caller unpersists: only the values frame exchanges
+    (shuffle_hash probes the adjacency in place).
     """
-    cores = hg.spark.sparkContext.defaultParallelism
-    n_pairs = 2 * half.count()
-    n_part = loop_partitions(n_pairs, cores)
-    sym = half.unionByName(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    if 0 < hg.num_vertices < 2**31:
-        sym = sym.select(
-            F.col("u").cast("int").alias("u"), F.col("v").cast("int").alias("v")
-        )
-    use_bcast = fits_broadcast(hg.spark, hg.num_vertices, unsafe_row_bytes(2))
-    if use_bcast:
-        n_part = max(n_part, cores)
-    adj = sym.repartition(n_part, "u" if use_bcast else "v").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    adj.count()
-    return adj, n_part, n_pairs, use_bcast
+    if fits_broadcast(hg.spark, hg.num_vertices, unsafe_row_bytes(2)):
+        return lay.sym, True
+    return lay.sym.repartition(lay.partitions, "v").persist(StorageLevel.MEMORY_AND_DISK), False
 
 
 def _h_sweep(adj: DataFrame, values: DataFrame, use_bcast: bool) -> DataFrame:
@@ -242,8 +202,8 @@ def coreness(
     the state once, with the change count observed on the checkpoint
     job; it stops at the first round with zero changes (the fixed point
     IS coreness).  Vertices with no co-occurrence neighbor get 0 via
-    the universe left-join.  ``adj``: optional precomputed clique
-    expansion shared across the co-occurrence family (see
+    the universe left-join.  ``adj``: optional materialized clique
+    expansion, the source of the co-occurrence layout (see
     triangle_count).
 
     Fusing is sound because the value sequence is pointwise
@@ -268,8 +228,8 @@ def coreness(
     """
     if fused_steps < 1:
         raise ValueError("fused_steps must be >= 1")
-    half = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
-    adj, n_part, n_pairs, use_bcast = coreness_adjacency(hg, half)
+    lay = cooccurrence(hg, adj)
+    adj, use_bcast = coreness_adjacency(hg, lay)
 
     # int state: c <= max expansion degree < 2^31; counts over
     # vertices (the H_g histogram) stay long
@@ -296,9 +256,9 @@ def coreness(
         "coreness", deg,
         lambda state, _: coreness_round(adj, state, fused_steps, use_bcast),
         [F.sum("_ch").alias("changes")], lambda row: row["changes"] == 0,
-        partitions=n_part,
+        partitions=lay.partitions,
         # a fresh run has work iff the graph has pairs
-        max_iterations=max_iterations if n_pairs else 0,
+        max_iterations=max_iterations if lay.n_pairs else 0,
         checkpoint_dir=checkpoint_dir, resume=resume,
     )
     out = (
@@ -306,7 +266,8 @@ def coreness(
         .join(res.state.select(F.col("u").alias("vertex_id"), "c"), "vertex_id", "left")
         .select("vertex_id", F.coalesce("c", F.lit(0)).cast("int").alias("coreness"))
     )
-    adj.unpersist()  # loop-local cache (state is checkpointed, not derived from it)
+    if not use_bcast:
+        adj.unpersist()  # loop-local copy (state is checkpointed, not derived from it)
     return CorenessResult(
         coreness=out, iterations=res.iterations,
         changes_per_iter=[r["changes"] for r in res.records],

@@ -31,7 +31,9 @@ cascade round):
               adjacency, closed by a removed-set semi join;
       new support = old - D1 + D2.
 - total loop work ~ one full pass + the smaller side of each round's
-  peel, instead of rounds x full-triangle-pass.
+  peel, instead of rounds x full-triangle-pass;
+- the base pairs and their symmetric adjacency are the shared
+  co-occurrence layout (triangles.cooccurrence), never copied here.
 
 Catalyst stats discipline (the r05 BigInt gotcha, see
 plans/inspect.py::stats_size_bits): the checkpointed support state is
@@ -56,13 +58,11 @@ from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-    PAIR_ROW_BYTES,
+    _oriented_triangles,
     _wedge_partitions,
-    clique_expansion,
-    packed_pair_key,
+    cooccurrence,
 )
 from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
-from hypergraph_gpu_label_propagation_spark.plans.tuning import fits_broadcast
 
 
 @dataclass
@@ -81,21 +81,20 @@ def k_truss(
 ) -> KTrussResult:
     """Edges (u < v) of the k-truss of the co-occurrence graph.
 
-    ``adj``: optional precomputed clique expansion (distinct u < v
-    pairs, already materialized) — see triangle_count."""
+    ``adj``: optional materialized clique expansion (distinct u < v
+    pairs), the source of the co-occurrence layout — see
+    triangle_count."""
     if k < 3:
         raise ValueError("k-truss needs k >= 3 (k-2 triangles per edge)")
-    # distinct u < v
-    base = clique_expansion(hg).localCheckpoint(eager=True) if adj is None else adj
-    n_pairs = base.count()
+    lay = cooccurrence(hg, adj)
+    # base: distinct u < v; sym_base: the layout's symmetric adjacency,
+    # the CONSTANT-stats wedge side for every per-round join
+    base, n_pairs, sym_base = lay.pairs, lay.n_pairs, lay.sym
 
     def _swap(df: DataFrame) -> DataFrame:
         return df.select(F.col("v").alias("u"), F.col("u").alias("v"))
 
     below = F.col("_c") < k - 2
-    # base expansion in both directions — the CONSTANT-stats wedge side
-    # for every per-round join (checkpointed once)
-    sym_base = base.unionByName(_swap(base)).localCheckpoint(eager=True)
 
     def _count_support(anchor: DataFrame, alive_sym: DataFrame) -> DataFrame:
         """(u, v, _c>0) for anchor edges: #w with (u,w) and (v,w) in
@@ -113,40 +112,15 @@ def k_truss(
         return tri.groupBy("u", "v").agg(F.count("*").alias("_c"))
 
     # round 0: full support, the ONLY full triangle pass — the
-    # ORIENTED u < v < w wedge shape (same as triangle_count: wedge
-    # volume sum_v lo(v)*hi(v), not the anchored sum_u hi(u)*deg(u)
-    # whose hi^2 hub term measured 14x slower at sf1), closed by an
-    # INNER join so each triangle row credits all three of its
-    # edges.  Edges in no triangle keep an explicit 0 row (union
-    # merge, not a join — see the stats discipline in the module
-    # doc); the init observation pre-counts next round's removals so
-    # the strategy choice is action-free.
-    # r08 (guide §2.4): broadcast the pair set in the seeding pass
-    # when it passes fits_broadcast (as triangles._oriented_triangles)
-    # — the wedge intermediate is then never exchanged; otherwise the
-    # r06 shuffle shape runs unchanged
-    _use_bcast0 = fits_broadcast(hg.spark, n_pairs, PAIR_ROW_BYTES)
-    _maybe_bcast = F.broadcast if _use_bcast0 else (lambda df: df)
-    wedges0 = base.join(
-        _maybe_bcast(base.select(F.col("u").alias("v"), F.col("v").alias("w"))),
-        "v",
-    )
-    if _use_bcast0 and 0 < hg.num_vertices < 2**31:
-        # packed single-long closing key (LongHashedRelation; see
-        # triangles._oriented_triangles) — base pairs are unique so
-        # the inner join's multiplicity is unchanged
-        tri0 = (
-            wedges0.withColumn("_uw", packed_pair_key("u", "w"))
-            .join(
-                F.broadcast(base.select(packed_pair_key("u", "v").alias("_uw"))),
-                "_uw",
-            )
-            .drop("_uw")
-        )
-    else:
-        tri0 = wedges0.join(
-            _maybe_bcast(base.select("u", F.col("v").alias("w"))), ["u", "w"]
-        )
+    # ORIENTED u < v < w pass of triangle_count itself (wedge volume
+    # sum_v lo(v)*hi(v), not the anchored sum_u hi(u)*deg(u) whose hi^2
+    # hub term measured 14x slower at sf1; its broadcast-or-shuffle
+    # rule and packed closing key included), and each triangle row
+    # credits all three of its edges.  Edges in no triangle keep an
+    # explicit 0 row (union merge, not a join — see the stats
+    # discipline in the module doc); the init observation pre-counts
+    # next round's removals so the strategy choice is action-free.
+    tri0 = _oriented_triangles(base, n_pairs, max_id=hg.num_vertices)
     cnt0 = (
         tri0.select(
             F.explode(

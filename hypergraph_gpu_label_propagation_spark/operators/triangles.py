@@ -9,11 +9,15 @@ triangle u<v<w is counted exactly once by the two-hop join:
   wedges(u,v,w)   = adj(u,v) JOIN adj(v,w)
   triangles       = wedges SEMI-JOIN adj ON (u,w)
 
+:func:`cooccurrence` is the one layout of the expansion per hypergraph,
+read by triangles, coreness, k-core and k-truss.
+
 Scale notes:
 - clique expansion of a size-k hyperedge is O(k^2) pairs — a monorepo
-  hyperedge with millions of files would explode, so ``max_edge_size``
-  caps which hyperedges are expanded (the standard practice for motif
-  counting on hypergraphs; document the cap in results);
+  hyperedge with millions of files would explode, so
+  ``clique_expansion(hg, max_edge_size)`` caps which hyperedges are
+  expanded (standard for hypergraph motif counting; document the cap
+  in results), and the family takes it materialized as ``adj=``;
 - the pair-generation self-join runs on the edge-partitioned layout
   (co-partitioned on edge_id -> no extra shuffle);
 - counting uses a semi-join, so no triangle materialization.
@@ -22,8 +26,9 @@ Scale notes:
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -31,6 +36,7 @@ from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.plans.tuning import (
     fits_broadcast,
     loop_conf,
+    loop_partitions,
     unsafe_row_bytes,
 )
 
@@ -109,80 +115,107 @@ def clique_expansion(hg: Hypergraph, max_edge_size: int | None = None) -> DataFr
     )
 
 
+@dataclass(frozen=True)
+class Cooccurrence:
+    pairs: DataFrame  # distinct (u, v), u < v; stays readable after hg.unpersist()
+    n_pairs: int  # rows of pairs
+    sym: DataFrame  # (u, v) both directions, partitioned by u, persisted
+    partitions: int  # sym's partition count
+
+
+def cooccurrence(
+    hg: Hypergraph, pairs: DataFrame | None = None, n_pairs: int | None = None
+) -> Cooccurrence:
+    """The co-occurrence layout of ``hg``, built once and held on it.
+
+    ``pairs``: the caller's materialized expansion as given (e.g. a
+    capped ``clique_expansion(hg, max_edge_size)``), else the full one,
+    localCheckpointed with its count observed on the same job; a
+    checkpoint, so a result joining it (k-truss membership) outlives
+    ``hg.unpersist()`` (persist+count measured within noise of it on
+    min, BENCH_SCALING.md "triangle_count materialization A/B").
+    ``n_pairs`` is counted at most once, not at all when passed.  The
+    memo key is the source: no ``pairs`` reuses only a layout of the
+    full expansion; another ``pairs`` object replaces the held layout.
+
+    ``sym``: both directions, ids narrowed to int when they fit (half
+    the bytes, exact), repartitioned by ``u`` into max(loop_partitions(
+    2 * n_pairs), cores) and persist()ed, lazily: the first job reading
+    it builds it (the triangle passes never do).  Not a checkpoint,
+    whose scan loses outputPartitioning, so the coreness and k-core
+    groupBy(u) would re-exchange it.  Pair-sized, not incidence-sized:
+    the expansion is 4x the incidence at sf1 (BENCH_SCALING.md round
+    5).  No broadcast decision is made here.  The wedge joins of
+    triangles and k-truss keep their own :func:`_wedge_partitions`
+    rule (<= 8x cores), because their intermediate inflates far past
+    the pair count: r05's sf1 A/B (11.96M pairs, local[32]) took
+    183.7 s at 32 partitions, this rule's cap there, and 24.6 s at 128.
+    """
+    held = hg._cooccurrence
+    if held is not None:
+        if pairs is held[0] or pairs is held[1].pairs:
+            return held[1]
+        held[1].sym.unpersist()
+    source = pairs
+    if pairs is None:
+        obs = Observation("cooccurrence_pairs")
+        pairs = (
+            clique_expansion(hg).observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_pairs = obs.get["n"]
+    elif n_pairs is None:
+        n_pairs = pairs.count()
+    cores = hg.spark.sparkContext.defaultParallelism
+    partitions = max(loop_partitions(2 * n_pairs, cores), cores)
+    sym = pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    if 0 < hg.num_vertices < 2**31:
+        sym = sym.select(F.col("u").cast("int").alias("u"), F.col("v").cast("int").alias("v"))
+    sym = sym.repartition(partitions, "u").persist(StorageLevel.MEMORY_AND_DISK)
+    layout = Cooccurrence(pairs, n_pairs, sym, partitions)
+    hg._cooccurrence = (source, layout)
+    return layout
+
+
 def triangle_count(
-    hg: Hypergraph,
-    max_edge_size: int | None = None,
-    adj: DataFrame | None = None,
-    n_pairs: int | None = None,
+    hg: Hypergraph, adj: DataFrame | None = None, n_pairs: int | None = None
 ) -> DataFrame:
     """Single-row DataFrame (n_triangles: long).
 
-    ``adj``: optional precomputed clique expansion (distinct u < v
-    pairs, already materialized) — the whole co-occurrence family
-    (triangles / coreness / k-truss / modularity) accepts it so one
-    persisted expansion serves every member (bench builds it once).
-    ``n_pairs``: optional row count of ``adj`` (skips one cheap scan of
-    the materialized expansion); used to size the wedge join's shuffle
-    partitions (see PAIRS_PER_PARTITION — the r05 sf1 audit caught the
-    fixed session default going 7.5x spill-slow at 10x data).
+    ``adj``/``n_pairs``: optional materialized clique expansion
+    (distinct u < v pairs) and its row count, the source of the
+    :func:`cooccurrence` layout every family member reads.  The wedge
+    join's shuffle partitions are sized from the pair count (see
+    PAIRS_PER_PARTITION — the r05 sf1 audit caught the fixed session
+    default going 7.5x spill-slow at 10x data).  The one-row result is
+    materialized inside the partition scope (the conf must be live at
+    action time), so it reads nothing from the layout afterwards.
     """
-    # persist()+count(), not eager localCheckpoint: the round-4 A/B
-    # (BENCH_SCALING.md "triangle_count materialization A/B", 4
-    # alternating reps at sf0.1, min/median)
-    # measured A=localCheckpoint 5.68/9.04s, B=persist+count 5.53/5.70s,
-    # C=none 9.04/9.65s — persist wins and is far more noise-robust.
-    # The 1-row result is materialized eagerly (inside the partition
-    # scope — the conf must be live at action time) so adj can be
-    # unpersisted before returning (no CacheManager entry outlives the
-    # call).
-    own = None
-    if adj is None:
-        own = clique_expansion(hg, max_edge_size).persist(StorageLevel.MEMORY_AND_DISK)
-        n_pairs = own.count()
-        adj = own
-    elif n_pairs is None:
-        n_pairs = adj.count()
-    with loop_conf(hg.spark, _wedge_partitions(hg.spark, n_pairs), adaptive=True):
-        tri = _oriented_triangles(adj, n_pairs, max_id=hg.num_vertices)  # u < v < w by construction
-        out = tri.agg(F.count("*").alias("n_triangles")).localCheckpoint(eager=True)
-    if own is not None:
-        own.unpersist()
-    return out
+    lay = cooccurrence(hg, adj, n_pairs)
+    with loop_conf(hg.spark, _wedge_partitions(hg.spark, lay.n_pairs), adaptive=True):
+        tri = _oriented_triangles(lay.pairs, lay.n_pairs, max_id=hg.num_vertices)
+        return tri.agg(F.count("*").alias("n_triangles")).localCheckpoint(eager=True)
 
 
-def per_vertex_triangle_count(
-    hg: Hypergraph,
-    max_edge_size: int | None = None,
-    adj: DataFrame | None = None,
-    n_pairs: int | None = None,
-) -> DataFrame:
+def per_vertex_triangle_count(hg: Hypergraph, adj: DataFrame | None = None) -> DataFrame:
     """(vertex_id, n_triangles) — triangles incident to each vertex;
-    degree-0 / triangle-free vertices get 0.  Partition sizing as in
-    :func:`triangle_count`."""
-    own = None
-    if adj is None:
-        own = clique_expansion(hg, max_edge_size).persist(StorageLevel.MEMORY_AND_DISK)
-        n_pairs = own.count()
-        adj = own
-    elif n_pairs is None:
-        n_pairs = adj.count()
-    with loop_conf(hg.spark, _wedge_partitions(hg.spark, n_pairs), adaptive=True):
-        tri = _oriented_triangles(adj, n_pairs, max_id=hg.num_vertices)
+    degree-0 / triangle-free vertices get 0.  Layout and partition
+    sizing as in :func:`triangle_count`."""
+    lay = cooccurrence(hg, adj)
+    with loop_conf(hg.spark, _wedge_partitions(hg.spark, lay.n_pairs), adaptive=True):
+        tri = _oriented_triangles(lay.pairs, lay.n_pairs, max_id=hg.num_vertices)
         per = (
             tri.select(F.explode(F.array("u", "v", "w")).alias("vertex_id"))
             .groupBy("vertex_id")
             .agg(F.count("*").alias("cnt"))
         )
-        out = (
+        return (
             hg.vertices().join(per, "vertex_id", "left").select(
                 "vertex_id",
                 F.coalesce("cnt", F.lit(0)).cast("long").alias("n_triangles"),
             )
             .localCheckpoint(eager=True)  # vertex-sized — materialize in-scope
         )
-    if own is not None:
-        own.unpersist()
-    return out
 
 
 def modularity(hg, labels, adj: DataFrame | None = None):

@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """spark.driver.memory when SPARK_DRIVER_MEMORY is unset: physical
+    RAM - 4 GiB, at most 16 GiB.  The 4 GiB is the headroom
+    tools/validate_entry.py::split_memory derives: ~1 GiB JVM off-heap
+    (metaspace, code cache, thread stacks, netty buffers) plus ~3 GiB
+    for the Python driver process.  plans/tuning.py::fits_broadcast
+    sizes its budget from this heap, so a heap larger than the host
+    would allow broadcasts the host cannot back.  Not half of RAM: on a
+    15.7 GiB host that heap's budget would put sf1's 11.96M pairs on
+    the shuffle path (BENCH_SCALING.md "One broadcast rule")."""
+    ram_mib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    return f"{max(1024, min(16 << 10, ram_mib - (4 << 10)))}m"
+
+
 def get_spark(
     app_name: str = "hypergraph_lp_spark",
     cores: int | None = None,
@@ -33,7 +47,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # keep stage progress bars out of stdout/stderr: they interleave
         # \r fragments into bench/validate output lines

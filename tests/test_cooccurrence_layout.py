@@ -1,0 +1,81 @@
+"""One co-occurrence layout per hypergraph
+(operators/triangles.py::cooccurrence).
+
+Triangles, coreness, k-core and k-truss all read the same memoized
+layout: after each call ``cooccurrence(hg)`` is the same object and the
+cache manager holds exactly one persisted symmetric relation, and
+``hg.unpersist()`` releases it.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from hypergraph_gpu_label_propagation_spark.model import Hypergraph
+from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness, k_core
+from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
+from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+    cooccurrence,
+    per_vertex_triangle_count,
+    triangle_count,
+)
+from tests.test_broadcast_rule import hg_small  # noqa: F401  (fixture)
+
+
+def _symmetric_cached(spark) -> int:
+    """Cache-manager entries whose plan unions the pair set with its
+    swap (the layout's ``sym``; the fixture's incidence has no Union)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    cached = field.get(cm)
+    return sum("Union" in cached.apply(i).plan().toString() for i in range(cached.size()))
+
+
+def _run_family(hg) -> dict:
+    """Each operator without ``adj``; the layout is checked after each."""
+    base = _symmetric_cached(hg.spark)
+    out, layouts = {}, []
+
+    def check(name, value):
+        out[name] = value
+        layouts.append(cooccurrence(hg))
+        assert layouts[-1] is layouts[0], name
+        assert _symmetric_cached(hg.spark) - base == 1, name
+
+    check("triangles", triangle_count(hg).collect()[0][0])
+    check("per_vertex", per_vertex_triangle_count(hg).agg(F.sum("n_triangles")).collect()[0][0])
+    core = coreness(hg)
+    check("coreness", sorted(map(tuple, core.coreness.collect())))
+    check("k_core", k_core(hg, 30).core_size)
+    kt = k_truss(hg, 24)
+    check("k_truss", kt.truss_size)
+    hg.unpersist()
+    assert _symmetric_cached(hg.spark) == base
+    # the membership joins the layout's pairs, which outlive the release
+    out["k_truss_kept"] = kt.membership.agg(F.sum("in_truss")).collect()[0][0]
+    return out
+
+
+def test_family_shares_one_layout(spark, hg_small):
+    out = _run_family(hg_small)
+    # networkx pins (tests/test_broadcast_rule.py fixture)
+    assert out["triangles"] == 96_474
+    assert out["per_vertex"] == 3 * 96_474
+    assert out["k_core"] == 144
+    assert out["k_truss"] == out["k_truss_kept"] == 4523
+    assert max(c for _, c in out["coreness"]) >= 30
+
+
+def test_zero_pair_hypergraph(spark):
+    """Singleton edges only: an empty layout through all five operators."""
+    inc = spark.createDataFrame([(e, e) for e in range(6)], "edge_id long, vertex_id long")
+    hg = Hypergraph.freeze(spark, inc)
+    out = _run_family(hg)
+    assert cooccurrence(hg).n_pairs == 0
+    hg.unpersist()
+    assert out["triangles"] == 0
+    assert out["per_vertex"] == 0
+    assert out["coreness"] == [(v, 0) for v in range(6)]
+    assert out["k_core"] == 0
+    assert out["k_truss"] == 0 and out["k_truss_kept"] is None

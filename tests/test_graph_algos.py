@@ -11,6 +11,7 @@ from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.components import connected_components
 from hypergraph_gpu_label_propagation_spark.operators.pagerank import hypergraph_pagerank
 from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+    clique_expansion,
     per_vertex_triangle_count,
     triangle_count,
 )
@@ -101,10 +102,12 @@ def test_triangle_count_random_and_per_vertex(spark):
 
 
 def test_triangle_max_edge_size_cap(spark):
-    # capping excludes the K4 hyperedge entirely
+    # capping excludes the K4 hyperedge entirely; the capped expansion
+    # is passed as adj=, and must not leak into a later no-adj call
     edges = [[0, 1, 2, 3], [0, 1], [1, 2], [0, 2]]
     hg = _freeze(spark, edges, 4)
-    assert triangle_count(hg, max_edge_size=3).collect()[0]["n_triangles"] == 1
+    capped = clique_expansion(hg, 3).localCheckpoint(eager=True)
+    assert triangle_count(hg, adj=capped).collect()[0]["n_triangles"] == 1
     assert triangle_count(hg).collect()[0]["n_triangles"] == 4
     hg.unpersist()
 

@@ -47,10 +47,7 @@ def main() -> None:
         pagerank_state_init,
         pagerank_step,
     )
-    from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-        clique_expansion,
-        triangle_count,
-    )
+    from hypergraph_gpu_label_propagation_spark.operators import triangles as tri_mod
     from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
 
     incidence = entrymod._incidence(spark, sf_dir)
@@ -81,40 +78,25 @@ def main() -> None:
         coreness_round,
     )
 
-    half = clique_expansion(hg).localCheckpoint(eager=True)
-    adj, core_part, _, use_bcast = coreness_adjacency(hg, half)
+    lay = tri_mod.cooccurrence(hg)
+    adj, use_bcast = coreness_adjacency(hg, lay)
     state = (
         adj.groupBy("u")
         .agg(F.count("*").cast("int").alias("c"))
         .localCheckpoint(eager=True)
     )
-    with loop_conf(spark, core_part):
+    with loop_conf(spark, lay.partitions):
         dump("coreness_round", coreness_round(adj, state, FUSED_STEPS, use_bcast))
-    adj.unpersist()
+    if not use_bcast:
+        adj.unpersist()  # coreness's v-partitioned fallback copy
 
-    # triangle_count over the shared adjacency (bench shape): capture
-    # the PRE-materialization agg plan (triangle_count() itself returns
-    # a localCheckpointed one-row frame whose plan is just the scan)
-    from hypergraph_gpu_label_propagation_spark.operators.triangles import (
-        _wedge_partitions,
-    )
-
-    from hypergraph_gpu_label_propagation_spark.operators import triangles as tri_mod
-
-    adj = half
-    n_pairs = adj.count()
-    with loop_conf(spark, _wedge_partitions(spark, n_pairs), adaptive=True):
-        if hasattr(tri_mod, "_oriented_triangles"):
-            tri = tri_mod._oriented_triangles(adj, n_pairs)
-        else:
-            # round-start tree: the r07 shuffle wedge shape
-            wedges = adj.join(
-                adj.select(F.col("u").alias("v"), F.col("v").alias("w")), "v"
-            )
-            tri = wedges.join(
-                adj.select(F.col("u"), F.col("v").alias("w")), ["u", "w"], "left_semi"
-            )
+    # triangle_count over the layout's pairs: capture the
+    # PRE-materialization agg plan (triangle_count() itself returns a
+    # localCheckpointed one-row frame whose plan is just the scan)
+    with loop_conf(spark, tri_mod._wedge_partitions(spark, lay.n_pairs), adaptive=True):
+        tri = tri_mod._oriented_triangles(lay.pairs, lay.n_pairs)
         dump("triangle_count", tri.agg(F.count("*").alias("n_triangles")))
+    hg.unpersist()
 
     # one-shot board entries
     dump("graph_profile", entrymod.q_graph_profile(spark, sf_dir))

@@ -44,18 +44,15 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entrymod
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness
-from hypergraph_gpu_label_propagation_spark.operators.triangles import clique_expansion
-from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf, loop_partitions
+from hypergraph_gpu_label_propagation_spark.operators.triangles import cooccurrence
+from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_conf
 from hypergraph_gpu_label_propagation_spark.session import get_spark
 
 
-def peel_full(spark, half, n_part):
-    """Full coreness by level peel; returns (core_df, rounds, wall)."""
-    adj = (
-        half.unionByName(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(n_part, "v")
-        .localCheckpoint(eager=True)
-    )
+def peel_full(spark, sym, n_part):
+    """Full coreness by level peel over the symmetric adjacency ``sym``;
+    returns (core_df, rounds, wall)."""
+    adj = sym.repartition(n_part, "v").localCheckpoint(eager=True)
     assigned = None  # (u, core)
     k = 0
     rounds = 0
@@ -95,16 +92,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("peel_coreness", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     hg = Hypergraph.freeze(spark, entrymod._incidence(spark, sf_dir))
-    half = clique_expansion(hg).localCheckpoint(eager=True)
-    n_pairs = half.count() * 2
-    n_part = loop_partitions(n_pairs, spark.sparkContext.defaultParallelism)
+    lay = cooccurrence(hg)
 
     t0 = time.monotonic()
-    sweep_res = coreness(hg, adj=half)
+    sweep_res = coreness(hg)  # reads the same layout
     sweep_res.coreness.write.format("noop").mode("overwrite").save()
     sweep_wall = time.monotonic() - t0
 
-    peeled, peel_rounds, peel_wall = peel_full(spark, half, n_part)
+    peeled, peel_rounds, peel_wall = peel_full(spark, lay.sym, lay.partitions)
 
     # exactness: peel == h-index fixed point, vertex for vertex
     sweep_vals = {
@@ -123,7 +118,7 @@ def main() -> None:
         json.dumps(
             {
                 "sf_dir": sf_dir,
-                "adj_pairs": n_pairs,
+                "adj_pairs": 2 * lay.n_pairs,
                 "sweep": {"sec": round(sweep_wall, 2), "rounds": sweep_res.iterations},
                 "peel": {"sec": round(peel_wall, 2), "rounds": peel_rounds},
                 "levels": len(set(peel_vals.values())),
