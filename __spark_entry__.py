@@ -284,23 +284,14 @@ def q_connected_components(spark, sf_dir):
 
 
 def q_pagerank_2iter(spark, sf_dir):
-    """Two loop-safe (fully lazy) pagerank_iteration composes: the
-    dangling mass is a broadcast scalar subquery inside each iteration's
-    plan, so the whole query is ONE job with zero driver collects."""
-    from hypergraph_gpu_label_propagation_spark.operators.pagerank import (
-        pagerank_iteration,
-    )
-
+    """Two PageRank iterations from the uniform start, run by the same
+    loop as pagerank_converged (pagerank.py::hypergraph_pagerank with
+    max_iterations=2 and tol=0, so the stop rule never fires first)."""
     hg = _freeze(spark, sf_dir)
-    inv_degree = hg.incidence_by_vertex.groupBy("vertex_id").agg(
-        (F.lit(1.0) / F.count("*")).alias("inv_degree")
-    )
-    ranks = hg.vertices().select(
-        "vertex_id", F.lit(1.0 / hg.num_vertices).cast("double").alias("rank")
-    )
-    for _ in range(2):
-        ranks = pagerank_iteration(hg, ranks, inv_degree, DAMPING)
-    return ranks.select("vertex_id", F.round("rank", 6).alias("rank"))
+    res = hypergraph_pagerank(hg, damping=DAMPING, max_iterations=2, tol=0.0)
+    out = res.ranks.select("vertex_id", F.round("rank", 6).alias("rank"))
+    hg.unpersist()
+    return out
 
 
 def q_pagerank_converged(spark, sf_dir):
@@ -342,8 +333,8 @@ def q_edges_pagerank(spark, sf_dir):
 
 def q_edges_cc(spark, sf_dir):
     """Connected components over the plain edge table (undirected
-    semantics: symmetrized adjacency, min-label propagation +
-    pointer jumping)."""
+    semantics: symmetrized adjacency, min-label propagation, one hop
+    per round; digraph.py::connected_components_edges)."""
     from hypergraph_gpu_label_propagation_spark.operators.digraph import (
         connected_components_edges,
     )

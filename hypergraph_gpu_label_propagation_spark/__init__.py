@@ -10,8 +10,8 @@ idiomatic Spark DataFrame programs:
   ``(vertex_id: long, label: int)``;
 - one label-propagation superstep is two gather-scatter aggregations
   (vertex->edge majority vote, edge->vertex majority vote) expressed as
-  join + bounded-domain count-vector aggregation (single shuffle per
-  phase, exact under partial aggregation);
+  join + a grouped (key, label, count) vote over the bounded label
+  domain (exact under map-side partial aggregation);
 - iteration/convergence lives in the Python driver, exactly where the
   reference keeps its host-side loop.
 

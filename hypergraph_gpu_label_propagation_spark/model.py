@@ -117,7 +117,9 @@ class Hypergraph:
         """Build the execution form (the reference's freeze(),
         src/common/hypergraph.cpp:80-83).
 
-        Computes the scalar counts once, optionally validates the
+        Computes the scalar counts once, rejecting a negative vertex
+        id on that same job (the int-narrowed and packed-key fast paths
+        assume ids in [0, num_vertices)), optionally validates the
         reference's construction invariants (empty-edge rejection and
         vertex-id bounds, src/common/hypergraph.cpp:17-21), and caches
         the two partition layouts.
@@ -158,7 +160,14 @@ class Hypergraph:
             row = pre.agg(
                 (F.max("vertex_id") + 1).alias("nv"),
                 F.count("*").alias("rows"),
+                F.min("vertex_id").alias("lo"),
             ).collect()[0]
+            if row["lo"] is not None and row["lo"] < 0:
+                pre.unpersist()
+                raise ValueError(
+                    f"vertex id {row['lo']} is negative (the reference rejects "
+                    "ids outside [0, num_vertices), hypergraph.cpp:19-21)"
+                )
             if num_vertices is None:
                 num_vertices = int(row["nv"] or 0)
             need_ne = num_edges is None

@@ -15,7 +15,10 @@ Semantics:
 - connected_components_edges: UNDIRECTED connectivity via iterative
   min-label exchange over the symmetrized edge list.
 - triangle_count_edges: triangles of the undirected simple graph
-  (each edge {u,v} counted once with u<v ordering).
+  (each edge {u,v} counted once with u<v ordering), by the same
+  counting kernel as the hypergraph triangle_count.
+- hits_edges: HITS hubs/authorities, a fixed number of L1-normalized
+  rounds.
 - lp_edges: the reference's majority-vote LP run on a pairwise graph —
   equivalent to hypergraph LP where every hyperedge has size 2.
 """
@@ -24,10 +27,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from hypergraph_gpu_label_propagation_spark.operators.triangles import count_triangles
 from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
 
 
@@ -125,6 +129,12 @@ class EdgeCCResult:
 
 
 def connected_components_edges(edges: DataFrame, max_iterations: int = 200) -> EdgeCCResult:
+    """Min-label propagation over the symmetrized adjacency, one hop per
+    round.  Kept beside the hypergraph CC on purpose: through
+    ``Hypergraph.freeze`` + ``connected_components`` the same components
+    take a round fewer (pointer jumping), but freeze builds two
+    incidence layouts first and the whole ran slower at sf0.1
+    (BENCH_SCALING.md "One copy of each graph kernel")."""
     spark = edges.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     adj = _symmetrize(edges).repartition(parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -157,16 +167,20 @@ def connected_components_edges(edges: DataFrame, max_iterations: int = 200) -> E
 
 
 def triangle_count_edges(edges: DataFrame) -> DataFrame:
-    """Single-row (n_triangles) over the undirected simple graph."""
-    adj = (
-        _symmetrize(edges)
-        .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    """Single-row (n_triangles) over the undirected simple graph: the
+    distinct (least, greatest) pairs, self-loops dropped, counted by
+    triangles.py::count_triangles.  Edge-table ids may be negative or
+    >= 2^31, so the packed pair key stays off (``max_id=None``)."""
+    src, dst = F.col("src").cast("long"), F.col("dst").cast("long")
+    obs = Observation("triangle_count_edges_pairs")
+    pairs = (
+        edges.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
-    wedges = adj.join(adj.select(F.col("u").alias("v"), F.col("v").alias("w")), "v")
-    tri = wedges.join(adj.select("u", F.col("v").alias("w")), ["u", "w"], "left_semi")
-    return tri.agg(F.count("*").alias("n_triangles"))
+    return count_triangles(pairs, obs.get["n"], max_id=None)
 
 
 def lp_edges(
@@ -211,8 +225,10 @@ def hits_edges(edges: DataFrame, iterations: int = 20) -> DataFrame:
     Per round: auth'(v) = sum over in-edges of hub(u), normalized to
     sum 1; hub'(u) = sum over out-edges of the NEW auth, normalized.
     The normalizing sums ride as one-row frames (crossJoin) so each
-    round stays one lazy plan + one checkpoint action.  Returns
-    (vertex_id, hub, auth) rounded to 6.
+    round stays one lazy plan; plans/loop.py::fixed_point runs the
+    rounds, observing the hub and auth totals (1 after the L1
+    normalization) as each round's record.  Returns (vertex_id, hub,
+    auth) rounded to 6.
     """
     spark = edges.sparkSession
     e = (
@@ -224,13 +240,13 @@ def hits_edges(edges: DataFrame, iterations: int = 20) -> DataFrame:
     n = uni.count()
     if n == 0:
         raise ValueError("hits_edges: empty edge table (no vertices)")
-    state = uni.select(
+    state0 = uni.select(
         "vertex_id",
         F.lit(1.0 / n).cast("double").alias("hub"),
         F.lit(1.0 / n).cast("double").alias("auth"),
-    ).localCheckpoint(eager=True)
+    )
 
-    for _ in range(iterations):
+    def step(state: DataFrame, _) -> DataFrame:
         a_raw = (
             e.join(state.select(F.col("vertex_id").alias("src"), "hub"), "src")
             .groupBy(F.col("dst").alias("vertex_id"))
@@ -253,7 +269,7 @@ def hits_edges(edges: DataFrame, iterations: int = 20) -> DataFrame:
             .agg(F.sum("auth").alias("_hr"))
         )
         h_sum = h_raw.agg(F.sum("_hr").alias("_hs"))
-        new = (
+        return (
             uni.join(h_raw, "vertex_id", "left")
             .crossJoin(h_sum)
             .select(
@@ -261,12 +277,18 @@ def hits_edges(edges: DataFrame, iterations: int = 20) -> DataFrame:
                 (F.coalesce("_hr", F.lit(0.0)) / F.col("_hs")).alias("hub"),
             )
             .join(auth, "vertex_id")
-            .localCheckpoint(eager=True)
         )
-        state.unpersist()
-        state = new
+
+    res = fixed_point(
+        "hits_edges", state0, step,
+        [F.sum("hub").alias("hub_total"), F.sum("auth").alias("auth_total")],
+        # a fixed round count: the rule never stops the loop early
+        lambda row: False,
+        partitions=int(spark.conf.get("spark.sql.shuffle.partitions")), adaptive=True,
+        max_iterations=iterations,
+    )
     e.unpersist()
     uni.unpersist()
-    return state.select(
+    return res.state.select(
         "vertex_id", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
     )

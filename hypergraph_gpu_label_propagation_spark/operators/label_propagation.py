@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.operators.majority import (
-    majority_label,
     majority_label_grouped_sql,
+    majority_label_narrow,
 )
 from hypergraph_gpu_label_propagation_spark.plans.loop import fixed_point
 from hypergraph_gpu_label_propagation_spark.plans.tuning import loop_partitions
@@ -46,13 +46,12 @@ def edge_majority_step(
     vertex_labels: DataFrame,
     max_labels: int = DEFAULT_MAX_LABELS,
 ) -> DataFrame:
-    """Phase 1: (edge_id, label) — per-edge majority of member-vertex labels.
-
-    Edges exist iff they have >= 1 member (empty edges are rejected at
-    construction, hypergraph.cpp:17), so an inner join covers every edge.
-    """
+    """Phase 1: (edge_id, label) — per-edge majority of member-vertex
+    labels, one row per edge of the incidence: the grouped vote and the
+    coalesce to 0 that :func:`lp_superstep`'s first superstep runs."""
     gathered = hg_incidence_by_vertex.join(vertex_labels, "vertex_id")
-    return majority_label(gathered, "edge_id", "label", max_labels, out_col="label")
+    edge_universe = hg_incidence_by_vertex.select("edge_id").distinct()
+    return majority_label_narrow(gathered, "edge_id", edge_universe, "label", max_labels)
 
 
 def weighted_vertex_majority_step(
@@ -110,9 +109,9 @@ def lp_superstep(
     shuffle fewer than joining a separate vertex universe.
 
     Both phases vote with narrow (key, label, count) rows — two narrow
-    shuffles per phase, ~3x less shuffle volume than the bounded
-    count-vector form on low-degree graphs (2.2-2.3x faster on the
-    20M-row kernel bench).  Exact incl. skew: partial aggregation emits
+    shuffles per phase, ~3x less shuffle volume than the 10-wide
+    count-vector vote it replaced on low-degree graphs (2.2-2.3x faster
+    on the 20M-row kernel bench).  Exact incl. skew: partial aggregation emits
     <= max_labels rows per hot key per map partition.
     """
     # join strategy note (measured on the 20M-row kernel bench): letting
@@ -131,16 +130,17 @@ def lp_superstep(
     # frames (or salted layouts) fall back to the co-partitioned shuffle
     # path (exact either way — the majority aggregation is algebraic)
     gathered_e = hg.gather_to_edge(vertex_labels)
-    best_e = majority_label_grouped_sql(gathered_e, "edge_id", "label", max_labels, "_m")
     if labels_in_range:
         # every input label is in [0, max_labels) (true from the second
         # superstep on — phase-2 output is always in range), so no edge
         # can drop out of the argmax: skip the universe-coalesce join
-        edge_labels = best_e.select("edge_id", F.col("_m").alias("label"))
+        edge_labels = majority_label_grouped_sql(
+            gathered_e, "edge_id", "label", max_labels, "label"
+        )
     else:
         edge_universe = hg.incidence_by_edge.select("edge_id").distinct()
-        edge_labels = edge_universe.join(best_e, "edge_id", "left").select(
-            "edge_id", F.coalesce("_m", F.lit(0)).cast("int").alias("label")
+        edge_labels = majority_label_narrow(
+            gathered_e, "edge_id", edge_universe, "label", max_labels
         )
     if weighted:
         universe = vertex_labels.select("vertex_id")

@@ -5,66 +5,25 @@ The reference keeps a bounded per-thread count array indexed by label
 src/common/argparse.cpp:277) and scans it for the smallest label index
 attaining the max count (src/openmp/label_propagation_openmp.cpp:85-98).
 
-Spark form: because the label domain is bounded and small, the exact
-analog of those per-thread scratch counters is a **count-vector
-aggregation** — ``max_labels`` conditional sums in one ``groupBy``.
-Catalyst's partial (map-side) aggregation then plays the role of the
-reference's per-thread counters: each map partition pre-reduces to at
-most one 10-wide row per key before the shuffle, so a hyperedge with
-millions of members (monorepo skew) contributes at most
-``num_map_partitions`` rows to the shuffle instead of millions.  That
-makes explicit key-salting unnecessary for the aggregation itself —
-partial agg IS the salted two-level tree, done by the engine.
-
-The argmax with the reference's smallest-index tie-break is
-``greatest(struct(count_i, -i) ...)`` — struct comparison is
-lexicographic, so ties on count resolve to the largest ``-i``, i.e. the
-smallest label.  All JVM-side, whole-stage-codegen friendly; no Python
-in the hot path.
+Spark form: a grouped vote.  ``groupBy(key, label).count()`` produces
+narrow (key, label, count) rows; Catalyst's partial (map-side)
+aggregation plays the role of the reference's per-thread counters, so a
+hyperedge with millions of members (monorepo skew) contributes at most
+``max_labels`` rows per map partition to the shuffle instead of
+millions.  That makes explicit key-salting unnecessary for the
+aggregation itself — partial agg IS the salted two-level tree, done by
+the engine.  A second, one-row-per-key aggregation then takes the
+argmax with the reference's smallest-index tie-break as
+``max(struct(count, -label))``: struct comparison is lexicographic, so
+ties on count resolve to the largest ``-label``, i.e. the smallest
+label.  All JVM-side, whole-stage-codegen friendly; no Python in the
+hot path.  LP's two phases and ``edge_majority_step`` all vote with it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def majority_label(
-    df: DataFrame,
-    key: str,
-    label_col: str = "label",
-    max_labels: int = 10,
-    out_col: str = "label",
-) -> DataFrame:
-    """Per-`key` majority vote over `label_col` with reference semantics.
-
-    - +1 per row (unit weights);
-    - rows with label outside [0, max_labels) are ignored (the -1
-      "unlabeled" sentinel never votes, openmp:85-87);
-    - winner = smallest label attaining the max count;
-    - keys whose every row is out-of-range still yield a row with label
-      0 (all-zero counts -> argmax index 0).
-
-    Returns ``(key, out_col)`` with one row per key present in ``df``.
-    """
-    if max_labels < 1:
-        raise ValueError("max_labels must be >= 1")
-    counts = [
-        F.sum(F.when(F.col(label_col) == i, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
-        for i in range(max_labels)
-    ]
-    counted = df.groupBy(key).agg(*counts)
-    if max_labels == 1:
-        return counted.select(key, F.lit(0).cast("int").alias(out_col))
-    candidates = [
-        F.struct(
-            F.col(f"_c{i}").alias("cnt"),
-            F.lit(-i).cast("int").alias("neg_label"),
-        )
-        for i in range(max_labels)
-    ]
-    winner = F.greatest(*candidates)
-    return counted.select(key, (-winner["neg_label"]).cast("int").alias(out_col))
 
 
 def majority_label_narrow(
@@ -75,18 +34,16 @@ def majority_label_narrow(
     max_labels: int = 10,
     out_col: str = "label",
 ) -> DataFrame:
-    """Exact majority with NARROW shuffles: groupBy(key, label).count()
-    (rows are (key,label,cnt) — 3 longs — instead of the count-vector
-    form's max_labels-wide rows), then per-key argmax, then coalesce to
-    label 0 against ``key_universe`` for keys whose every row was
-    filtered (all-unlabeled -> all-zero counts -> 0, reference rule).
+    """Per-`key` majority vote over `label_col` with reference semantics,
+    one row per key of ``key_universe``:
 
-    Trade-off vs :func:`majority_label`: ~3x less shuffle volume on
-    low-degree graphs (the common case: uniform hyperedges, size 2-8),
-    identical skew behavior (partial agg emits <= max_labels rows per
-    hot key per map partition), at the cost of a second (tiny,
-    one-row-per-key) shuffle and the universe coalesce.  The engine
-    exposes both; bench picks per workload.
+    - +1 per row (unit weights);
+    - rows with label outside [0, max_labels) are ignored (the -1
+      "unlabeled" sentinel never votes, openmp:85-87);
+    - winner = smallest label attaining the max count;
+    - keys whose every row is out-of-range (or that have no row) get
+      label 0 (all-zero counts -> argmax index 0), by a coalesce
+      against ``key_universe``.
     """
     best = majority_label_grouped_sql(df, key, label_col, max_labels, out_col="_m")
     return key_universe.join(best, key, "left").select(
@@ -101,16 +58,11 @@ def majority_label_grouped_sql(
     max_labels: int = 10,
     out_col: str = "label",
 ) -> DataFrame:
-    """Alternative pure-SQL formulation: groupBy(key, label).count() then
-    per-key top-1 with ordering (count desc, label asc) via
-    ``max(struct(cnt, -label))``.
-
-    Unbounded label domains work here (no fixed-width count vector), at
-    the cost of a second aggregation.  Keys with only out-of-range
-    labels DROP OUT (no row) — callers must coalesce to 0 against the
-    key universe to match reference all-zero-counts behavior.  Kept as
-    the scale path for ``max_labels`` too large for a count vector and
-    for A/B benchmarking against :func:`majority_label`.
+    """The grouped vote: groupBy(key, label).count(), then per-key top-1
+    with ordering (count desc, label asc) via ``max(struct(cnt,
+    -label))``.  Keys with only out-of-range labels DROP OUT (no row);
+    :func:`majority_label_narrow` coalesces them to 0 against the key
+    universe, and a caller that knows every label is in range skips it.
     """
     in_range = df.filter((F.col(label_col) >= 0) & (F.col(label_col) < max_labels))
     counted = in_range.groupBy(key, label_col).agg(F.count("*").alias("_cnt"))

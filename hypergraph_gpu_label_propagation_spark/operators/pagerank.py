@@ -194,42 +194,6 @@ def _power_iterate(
     )
 
 
-# backwards-compatible single-step API used by __spark_entry__'s
-# fixed-iteration oracle query
-def pagerank_iteration(
-    hg: Hypergraph,
-    ranks: DataFrame,
-    inv_degree: DataFrame,
-    damping: float,
-) -> DataFrame:
-    """One iteration from a bare (vertex_id, rank) frame.  Fully lazy
-    and loop-safe: the dangling mass is a broadcast scalar subquery in
-    the SAME plan (1-row aggregate cross-joined in), so composing k
-    iterations costs zero driver actions."""
-    state = ranks.join(inv_degree, "vertex_id", "left").select(
-        "vertex_id", "rank", "inv_degree"
-    )
-    n = hg.num_vertices
-    gathered = _walk_gather(hg, state)
-    dang = state.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("inv_degree").isNull(), F.col("rank"))), F.lit(0.0)
-        ).alias("_dm")
-    )
-    return (
-        state.join(gathered, "vertex_id", "left")
-        .crossJoin(F.broadcast(dang))
-        .select(
-            "vertex_id",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.col("_dm") / F.lit(float(n))
-                + F.lit(damping) * F.coalesce("gathered", F.lit(0.0))
-            ).alias("rank"),
-        )
-    )
-
-
 def ppr_state_init(hg: Hypergraph, seeds: list[int]) -> DataFrame:
     """(vertex_id, rank=s, inv_degree|null, s) where s is the restart
     vector: 1/|seeds| on seed vertices, 0 elsewhere.  The restart weight

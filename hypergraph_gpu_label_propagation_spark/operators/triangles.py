@@ -192,8 +192,18 @@ def triangle_count(
     action time), so it reads nothing from the layout afterwards.
     """
     lay = cooccurrence(hg, adj, n_pairs)
-    with loop_conf(hg.spark, _wedge_partitions(hg.spark, lay.n_pairs), adaptive=True):
-        tri = _oriented_triangles(lay.pairs, lay.n_pairs, max_id=hg.num_vertices)
+    return count_triangles(lay.pairs, lay.n_pairs, max_id=hg.num_vertices)
+
+
+def count_triangles(pairs: DataFrame, n_pairs: int, max_id: int | None) -> DataFrame:
+    """Single-row (n_triangles: long) over materialized distinct u < v
+    ``pairs`` of ``n_pairs`` rows, counted and localCheckpointed inside
+    the :func:`_wedge_partitions` scope.  ``max_id`` as in
+    :func:`_oriented_triangles`: None when the ids are not known to lie
+    in [0, 2^31), so the packed key never fires on them."""
+    spark = pairs.sparkSession
+    with loop_conf(spark, _wedge_partitions(spark, n_pairs), adaptive=True):
+        tri = _oriented_triangles(pairs, n_pairs, max_id=max_id)
         return tri.agg(F.count("*").alias("n_triangles")).localCheckpoint(eager=True)
 
 
@@ -222,38 +232,31 @@ def modularity(hg, labels, adj: DataFrame | None = None):
     """Newman modularity of a vertex labeling on the clique-expanded
     co-occurrence graph: Q = sum_c [ e_c/m - (d_c/(2m))^2 ] with e_c =
     intra-community edges, d_c = total degree of community c, m = total
-    edges.  One lazy plan (the edge count rides as a one-row frame, no
-    driver collect), so it composes into contract queries and pipelines.
+    edges.  Reads the :func:`cooccurrence` layout (``adj`` as its
+    source): m is its pair count, the degrees a groupBy on ``sym``'s
+    partitioning key, the intra-community edges its ``pairs``.
 
     ``labels``: (vertex_id, label) one row per vertex (e.g. LP output).
     Returns a one-row DataFrame (modularity: double).
     """
-    from pyspark.sql import functions as F
-
-    if adj is None:
-        adj = clique_expansion(hg)  # distinct u < v pairs
-    m = adj.agg(F.count("*").cast("double").alias("m"))
-    deg = (
-        adj.select(F.col("u").alias("x"))
-        .unionAll(adj.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count("*").cast("double").alias("d"))
-    )
+    lay = cooccurrence(hg, adj)
+    m = float(lay.n_pairs)
+    deg = lay.sym.groupBy("u").agg(F.count("*").cast("double").alias("d"))
     la = labels.select(F.col("vertex_id").alias("u"), F.col("label").alias("_la"))
     lb = labels.select(F.col("vertex_id").alias("v"), F.col("label").alias("_lb"))
     intra = (
-        adj.join(la, "u").join(lb, "v")
+        lay.pairs.join(la, "u").join(lb, "v")
         .filter(F.col("_la") == F.col("_lb"))
         .groupBy(F.col("_la").alias("label"))
         .agg(F.count("*").cast("double").alias("e"))
     )
     dc = (
-        labels.join(deg, labels.vertex_id == deg.x)
+        labels.join(deg, labels.vertex_id == deg.u)
         .groupBy("label")
         .agg(F.sum("d").alias("dsum"))
     )
-    per_label = dc.join(intra, "label", "left").crossJoin(m).select(
-        (F.coalesce("e", F.lit(0.0)) / F.col("m")
-         - F.pow(F.col("dsum") / (2 * F.col("m")), 2)).alias("q")
+    per_label = dc.join(intra, "label", "left").select(
+        (F.coalesce("e", F.lit(0.0)) / F.lit(m)
+         - F.pow(F.col("dsum") / F.lit(2 * m), 2)).alias("q")
     )
     return per_label.agg(F.round(F.sum("q"), 6).alias("modularity"))

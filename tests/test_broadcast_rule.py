@@ -57,6 +57,9 @@ def _run_all(spark, hg):
     from hypergraph_gpu_label_propagation_spark.operators.components import (
         connected_components,
     )
+    from hypergraph_gpu_label_propagation_spark.operators.digraph import (
+        triangle_count_edges,
+    )
     from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness, k_core
     from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
     from hypergraph_gpu_label_propagation_spark.operators.label_propagation import (
@@ -66,6 +69,8 @@ def _run_all(spark, hg):
         hypergraph_pagerank,
     )
     from hypergraph_gpu_label_propagation_spark.operators.triangles import (
+        cooccurrence,
+        modularity,
         per_vertex_triangle_count,
         triangle_count,
     )
@@ -86,8 +91,15 @@ def _run_all(spark, hg):
         "k_core": (kc.core_size, kc.removed_per_iter, _rows(kc.membership)),
         "triangles": triangle_count(hg).collect()[0][0],
         "triangles_per_vertex": _rows(per_vertex_triangle_count(hg)),
+        "modularity": modularity(hg, lp.labels).collect()[0][0],
         "k_truss": (kt.truss_size, kt.removed_per_iter, _rows(kt.membership)),
     }
+    # the same pairs as a plain edge table, given in both directions
+    pairs = cooccurrence(hg).pairs
+    edges = pairs.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+        pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+    out["triangles_edges"] = triangle_count_edges(edges).collect()[0][0]
     ranks = {
         r["vertex_id"]: r["rank"]
         for r in hypergraph_pagerank(hg, tol=1e-9).ranks.collect()
@@ -125,7 +137,7 @@ def test_threshold_off_forces_every_shuffle_fallback(spark, hg_small):
     assert not hashed, hashed[0][:3000]
     # the fixture is not degenerate (counts checked with networkx)
     assert out_b["lp"][0] > 1 and out_b["coreness"][0] >= 1
-    assert out_b["triangles"] == 96_474
+    assert out_b["triangles"] == out_b["triangles_edges"] == 96_474
     assert out_b["k_core"][0] == 144 and out_b["k_truss"][0] == 4523
     for name in out_b:
         assert out_b[name] == out_s[name], name

@@ -1,14 +1,15 @@
 """One co-occurrence layout per hypergraph
 (operators/triangles.py::cooccurrence).
 
-Triangles, coreness, k-core and k-truss all read the same memoized
-layout: after each call ``cooccurrence(hg)`` is the same object and the
-cache manager holds exactly one persisted symmetric relation, and
-``hg.unpersist()`` releases it.
+Triangles, coreness, k-core, k-truss and modularity all read the same
+memoized layout: after each call ``cooccurrence(hg)`` is the same
+object and the cache manager holds exactly one persisted symmetric
+relation, and ``hg.unpersist()`` releases it.
 """
 
 from __future__ import annotations
 
+import networkx as nx
 from pyspark.sql import functions as F
 
 from hypergraph_gpu_label_propagation_spark.model import Hypergraph
@@ -16,6 +17,7 @@ from hypergraph_gpu_label_propagation_spark.operators.kcore import coreness, k_c
 from hypergraph_gpu_label_propagation_spark.operators.ktruss import k_truss
 from hypergraph_gpu_label_propagation_spark.operators.triangles import (
     cooccurrence,
+    modularity,
     per_vertex_triangle_count,
     triangle_count,
 )
@@ -45,6 +47,10 @@ def _run_family(hg) -> dict:
 
     check("triangles", triangle_count(hg).collect()[0][0])
     check("per_vertex", per_vertex_triangle_count(hg).agg(F.sum("n_triangles")).collect()[0][0])
+    labels = hg.vertices().select(
+        "vertex_id", F.pmod("vertex_id", F.lit(10)).cast("int").alias("label")
+    )
+    check("modularity", modularity(hg, labels).collect()[0][0])
     core = coreness(hg)
     check("coreness", sorted(map(tuple, core.coreness.collect())))
     check("k_core", k_core(hg, 30).core_size)
@@ -65,6 +71,13 @@ def test_family_shares_one_layout(spark, hg_small):
     assert out["k_core"] == 144
     assert out["k_truss"] == out["k_truss_kept"] == 4523
     assert max(c for _, c in out["coreness"]) >= 30
+    # Newman Q of the vertex_id % 10 labelling, recomputed by networkx
+    # on the same pairs
+    g = nx.Graph()
+    g.add_edges_from(map(tuple, cooccurrence(hg_small).pairs.collect()))
+    parts = [{v for v in g if v % 10 == c} for c in range(10)]
+    want = nx.community.modularity(g, [p for p in parts if p])
+    assert abs(out["modularity"] - want) <= 1e-6, (out["modularity"], want)
 
 
 def test_zero_pair_hypergraph(spark):
@@ -76,6 +89,7 @@ def test_zero_pair_hypergraph(spark):
     hg.unpersist()
     assert out["triangles"] == 0
     assert out["per_vertex"] == 0
+    assert out["modularity"] is None  # no pairs, no degrees: an empty sum
     assert out["coreness"] == [(v, 0) for v in range(6)]
     assert out["k_core"] == 0
     assert out["k_truss"] == 0 and out["k_truss_kept"] is None

@@ -78,6 +78,16 @@ def test_triangle_count_edges(spark):
     assert triangle_count_edges(_edges_df(spark, [(0, 1), (1, 2)])).collect()[0][
         "n_triangles"
     ] == 0
+    # ids outside [0, 2^31): the same K4 + pendant relabelled, given in
+    # both directions and with a self-loop
+    ids = {0: -(2**31) - 1, 1: -1, 2: 2**31, 3: 2**32 + 1, 9: 2**40}
+    relabelled = [(ids[a], ids[b]) for a, b in k4 + [(3, 9)]]
+    messy = relabelled + [(b, a) for a, b in relabelled] + [(ids[2], ids[2])]
+    assert triangle_count_edges(_edges_df(spark, messy)).collect()[0]["n_triangles"] == 4
+    # no triangle, but a packed key would read the wedge 1-3-(2^32 + 5)'s
+    # closing pair (1, 2^32 + 5) as the edge (2, 5)
+    alias = [(1, 3), (3, 2**32 + 5), (2, 5)]
+    assert triangle_count_edges(_edges_df(spark, alias)).collect()[0]["n_triangles"] == 0
 
 
 def test_lp_edges_matches_size2_hypergraph_oracle(spark):

@@ -1,6 +1,6 @@
 """The durable bucketed layout is sized by the loop partition rule, like
-``Hypergraph.freeze``; plus the guards of the packed closing key and the
-null-edge-id count."""
+``Hypergraph.freeze``; plus the guards of the packed closing key, the
+null-edge-id count and freeze's negative-id check."""
 
 from __future__ import annotations
 
@@ -182,3 +182,18 @@ def test_null_edge_id_is_not_an_edge(spark):
         assert freeze_from_bucketed(spark, "t_null_edge").num_edges == 2
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+@pytest.mark.parametrize("low", [-1, -(2**31) - 5])
+def test_freeze_rejects_negative_vertex_id(spark, low):
+    """The int-narrowed and packed-key fast paths assume ids >= 0: with
+    one hyperedge {low, 1, 2}, triangle_count would report 1 and the
+    per-vertex counts and coreness would drop ``low`` for a vertex 0
+    that is not in the graph, so freeze must refuse the incidence."""
+    inc = spark.createDataFrame([(0, low), (0, 1), (0, 2)], "edge_id long, vertex_id long")
+    with pytest.raises(ValueError, match="negative"):
+        Hypergraph.freeze(spark, inc)
+    # ids >= 0 still freeze, with the counts unchanged
+    hg = Hypergraph.freeze(spark, inc.where(F.col("vertex_id") >= 0))
+    assert (hg.num_vertices, hg.num_edges, hg.incidence_rows) == (3, 1, 2)
+    hg.unpersist()

@@ -36,10 +36,13 @@ def test_small_dim_join_broadcasts(spark):
     assert uses_broadcast_join(q)
 
 
-def test_majority_is_single_exchange_per_phase(spark):
-    """The bounded count-vector majority must aggregate in ONE shuffle
-    (partial agg map-side), not two."""
-    from hypergraph_gpu_label_propagation_spark.operators.majority import majority_label
+def test_majority_vote_exchanges_per_phase(spark):
+    """The grouped majority vote every LP phase runs shuffles twice: the
+    narrow (key, label) counts after map-side partial aggregation, then
+    the one-row-per-key argmax."""
+    from hypergraph_gpu_label_propagation_spark.operators.majority import (
+        majority_label_grouped_sql,
+    )
 
     inc = spark.createDataFrame(
         [(e, v) for e in range(10) for v in range(5)], "edge_id long, vertex_id long"
@@ -47,11 +50,12 @@ def test_majority_is_single_exchange_per_phase(spark):
     labels = spark.createDataFrame(
         [(v, v % 3) for v in range(5)], "vertex_id long, label int"
     )
-    out = majority_label(inc.join(labels, "vertex_id"), "edge_id", "label", 10)
-    # one exchange for the join's labels side + one for the groupBy
-    assert count_exchanges(out) <= 3
+    out = majority_label_grouped_sql(inc.join(labels, "vertex_id"), "edge_id", "label", 10)
+    # one exchange per join side + the vote's two
+    assert count_exchanges(out) == 4
     plan = explain_str(out, "simple")
-    assert "partial_sum" in plan or "HashAggregate" in plan
+    assert plan.count("Exchange hashpartitioning(edge_id#") == 2
+    assert "partial_count" in plan
 
 
 def test_salted_join_exact(spark):

@@ -1,7 +1,12 @@
 """Dump `.explain("formatted")` for every query/operator the r08
-optimization round touches, into plans/r08/<name>_<tag>.txt.
+optimization round touches, as <name>_<tag>.txt.
 
-Usage: python tools/dump_plans_r08.py before|after [sf_dir]
+Usage: python tools/dump_plans_r08.py <tag> [sf_dir]
+
+The committed pins are the ``before`` and ``after`` tags, written into
+plans/r08/.  Any other tag (e.g. ``check``, to diff one checkout's
+plans against another's) writes into a new temporary directory, printed
+at the start, so it leaves nothing in the tree.
 
 For iterative operators (LP / CC / PageRank / coreness) the captured
 plan is ONE superstep/round frame — the loop repeats the same shape, so
@@ -15,6 +20,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,12 +31,18 @@ from hypergraph_gpu_label_propagation_spark.model import Hypergraph
 from hypergraph_gpu_label_propagation_spark.plans.inspect import explain_str
 from hypergraph_gpu_label_propagation_spark.session import get_spark
 
+PINNED_TAGS = ("before", "after")
+
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r08")
-    os.makedirs(out_dir, exist_ok=True)
+    if tag in PINNED_TAGS:
+        out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r08")
+        os.makedirs(out_dir, exist_ok=True)
+    else:
+        out_dir = tempfile.mkdtemp(prefix=f"dump_plans_r08_{tag}_")
+    print(f"writing {tag} plans into {out_dir}")
     spark = get_spark("dump_plans_r08")
 
     def dump(name: str, df) -> None:
